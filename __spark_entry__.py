@@ -34,149 +34,12 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Every gated query: `oracle_sql()` is the one list, and key `n` runs
+    `plans.queries.q_<n>`. To gate a new query, write `q_<name>` there and
+    add its `oracle_sql()` entry."""
     from intraarchivededuplicator_spark.plans import queries as q
 
-    return {
-        # exact family (J1/J3)
-        "exact_dup_groups": q.q_exact_dup_groups,
-        "exact_hash_rows": q.q_exact_hash_rows,
-        # SimHash family (H2, J4-J7, A6-A8, R1)
-        "simhash_signatures": q.q_simhash_signatures,
-        "simhash_radius_pairs": q.q_simhash_radius_pairs,
-        "simhash_radius_search": q.q_simhash_radius_search,
-        "probe_session_search": q.q_probe_session_search,
-        "near_pairs_within_horizon": q.q_near_pairs_within_horizon,
-        "incremental_near_pairs": q.q_incremental_near_pairs,
-        "stream_near_dedup_replay": q.q_stream_near_dedup_replay,
-        "stream_exact_dedup_replay": q.q_stream_exact_dedup_replay,
-        "simhash_clusters": q.q_simhash_clusters,
-        "dedup_cluster_stats": q.q_dedup_cluster_stats,
-        "dedup_keep_list": q.q_dedup_keep_list,
-        "dedup_funnel": q.q_dedup_funnel,
-        "soft_dedup_weights": q.q_soft_dedup_weights,
-        "quality_funnel": q.q_quality_funnel,
-        "perplexity_buckets": q.q_perplexity_buckets,
-        "token_entropy": q.q_token_entropy,
-        "gram_novelty_by_batch": q.q_gram_novelty_by_batch,
-        "multi_signal_clusters": q.q_multi_signal_clusters,
-        "dedup_ablation": q.q_dedup_ablation,
-        "ivf_cell_stats": q.q_ivf_cell_stats,
-        "anchor_text_profile": q.q_anchor_text_profile,
-        "simhash_pair_precision": q.q_simhash_pair_precision,
-        "domain_dup_affinity": q.q_domain_dup_affinity,
-        "cluster_diameter_stats": q.q_cluster_diameter_stats,
-        "simhash_hot_bands": q.q_simhash_hot_bands,
-        "best_simhash_match": q.q_best_simhash_match,
-        "best_matching_source": q.q_best_matching_source,
-        "similar_sources_truncated": q.q_similar_sources_truncated,
-        "quality_match_counts": q.q_quality_match_counts,
-        "source_uniqueness": q.q_source_uniqueness,
-        "match_count_histogram": q.q_match_count_histogram,
-        # MinHash family (H3, LSH)
-        "minhash_signatures_long": q.q_minhash_signatures_long,
-        "minhash_band_pairs": q.q_minhash_band_pairs,
-        "minhash_jaccard_estimate": q.q_minhash_jaccard_estimate,
-        "minhash_recall_audit": q.q_minhash_recall_audit,
-        "minhash_dedup_clusters": q.q_minhash_dedup_clusters,
-        # set-similarity + containment (J12)
-        "ngram_jaccard_pairs": q.q_ngram_jaccard_pairs,
-        "title_typo_pairs": q.q_title_typo_pairs,
-        "containment_pairs": q.q_containment_pairs,
-        "containment_pairs_winnowed": q.q_containment_pairs_winnowed,
-        # text analysis
-        "doc_stats": q.q_doc_stats,
-        "token_stats_bpe": q.q_token_stats_bpe,
-        "lang_top_terms": q.q_lang_top_terms,
-        "vocab_stats": q.q_vocab_stats,
-        "pair_distance_histogram": q.q_pair_distance_histogram,
-        "langid_heuristic": q.q_langid_heuristic,
-        "langid_confusion": q.q_langid_confusion,
-        "doc_fingerprint": q.q_doc_fingerprint,
-        "contamination_overlap": q.q_contamination_overlap,
-        "url_canonicalize": q.q_url_canonicalize,
-        "url_latest_snapshot": q.q_url_latest_snapshot,
-        "url_revisit_diff": q.q_url_revisit_diff,
-        "doc_repetition_stats": q.q_doc_repetition_stats,
-        "dup_gram_stats": q.q_dup_gram_stats,
-        "dup_span_stats": q.q_dup_span_stats,
-        "dup_span_removal": q.q_dup_span_removal,
-        "heavy_hitter_grams": q.q_heavy_hitter_grams,
-        "charlm_quality": q.q_charlm_quality,
-        "cdc_chunk_stats": q.q_cdc_chunk_stats,
-        "length_quantiles": q.q_length_quantiles,
-        "domain_link_graph": q.q_domain_link_graph,
-        "domain_pagerank": q.q_domain_pagerank,
-        "doc_salient_terms": q.q_doc_salient_terms,
-        # line-level web pipeline (CCNet-style)
-        "line_dup_stats": q.q_line_dup_stats,
-        "boilerplate_strip": q.q_boilerplate_strip,
-        "pii_scrub": q.q_pii_scrub,
-        "bloom_dedup_incremental": q.q_bloom_dedup_incremental,
-        "sequence_pack_offsets": q.q_sequence_pack_offsets,
-        "pack_efficiency": q.q_pack_efficiency,
-        "dedup_key_normalize": q.q_dedup_key_normalize,
-        # similarity search over embeddings
-        "embedding_knn": q.q_embedding_knn,
-        "embedding_knn_ann": q.q_embedding_knn_ann,
-        "embedding_knn_ivf": q.q_embedding_knn_ivf,
-        "embedding_near_pairs": q.q_embedding_near_pairs,
-        "embedding_near_pairs_ann": q.q_embedding_near_pairs_ann,
-        "embedding_near_pairs_ivf": q.q_embedding_near_pairs_ivf,
-        "embedding_dup_clusters": q.q_embedding_dup_clusters,
-        "ann_recall_audit": q.q_ann_recall_audit,
-        "lsh_recall_audit": q.q_lsh_recall_audit,
-        # masks + prefix scan (P3/P5)
-        "source_prefix_scan": q.q_source_prefix_scan,
-        "masked_match_candidates": q.q_masked_match_candidates,
-        # container-shaped coverage (A5/J2/A9/J11)
-        "site_doc_groups": q.q_site_doc_groups,
-        "minhash_pairs_cross_source": q.q_minhash_pairs_cross_source,
-        "source_integrity": q.q_source_integrity,
-        "deterministic_sample": q.q_deterministic_sample,
-        "stratified_sample": q.q_stratified_sample,
-        "shard_balance": q.q_shard_balance,
-        # training-set assembly: split, selection, yield
-        "train_split_leakage": q.q_train_split_leakage,
-        "dsir_weights": q.q_dsir_weights,
-        "token_yield_funnel": q.q_token_yield_funnel,
-        "cluster_best_rep": q.q_cluster_best_rep,
-        "signal_agreement": q.q_signal_agreement,
-        "source_dedup_savings": q.q_source_dedup_savings,
-        "kmv_cardinality": q.q_kmv_cardinality,
-        "stream_embedding_near_dup_replay": q.q_stream_embedding_near_dup_replay,
-        "incremental_embedding_near_pairs": q.q_incremental_embedding_near_pairs,
-        # multimodal decode (SURVEY 2.10)
-        "media_decode_dims": q.q_media_decode_dims,
-        "media_near_dup_pairs": q.q_media_near_dup_pairs,
-        "media_near_dup_pairs_ivf": q.q_media_near_dup_pairs_ivf,
-        "media_resized_dims": q.q_media_resized_dims,
-        "media_frame_sample": q.q_media_frame_sample,
-        # catalog mutation roundtrip (S6-S9, C5)
-        "catalog_merge_roundtrip": q.q_catalog_merge_roundtrip,
-        # extraction roundtrip (S2/S3) + mime fixup (H7)
-        "html_extract_roundtrip": q.q_html_extract_roundtrip,
-        "mime_fixup": q.q_mime_fixup,
-        # incremental ingest roundtrip (S4/S5)
-        "incremental_ingest_roundtrip": q.q_incremental_ingest_roundtrip,
-        # junk gate (P6) + quality scoring
-        "junk_flags": q.q_junk_flags,
-        "text_quality": q.q_text_quality,
-        "source_quality_rollup": q.q_source_quality_rollup,
-        "domain_quota_topk": q.q_domain_quota_topk,
-        # windows / relational coverage. NOTE: the r4 driver gated 50 of
-        # the then-52 entries, skipping
-        # orders_by_priority_month and nation_revenue (both DO have
-        # oracle_sql entries below); their transport-strict oracle compare
-        # is pinned locally in tests/test_driver_gate_leftovers.py so the
-        # gate-vs-surface delta is documented, not drift.
-        "user_sessions": q.q_user_sessions,
-        "stream_sessions_replay": q.q_stream_sessions_replay,
-        "events_hourly_rate": q.q_events_hourly_rate,
-        "crawl_rate_hourly": q.q_crawl_rate_hourly,
-        "orders_by_priority_month": q.q_orders_by_priority_month,
-        "nation_revenue": q.q_nation_revenue,
-        "lineitem_pricing_summary": q.q_lineitem_pricing_summary,
-    }
+    return {n: getattr(q, "q_" + n) for n in oracle_sql()}
 
 
 def oracle_sql() -> dict[str, str]:

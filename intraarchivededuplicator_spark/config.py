@@ -57,7 +57,6 @@ class DedupConfig:
     # MinHash candidates entering the cluster graph must pass exact Jaccard
     # verification at this threshold (candidates alone are probabilistic)
     jaccard_verify_threshold: float = 0.7
-    candidate_cap: int | None = None  # None = exact (no reference-style skip)
     # containment anchor-exchange winnowing (operators/containment.py,
     # functions/hashing.winnow_split): window-w sliding-min selection shrinks
     # the flagship's largest exchange ~(w+1)/2-fold with a DETERMINISTIC

@@ -37,7 +37,8 @@ def minhash_candidate_pairs(
     id_col: str = "id",
     sig_col: str = "minhash",
     n_bands: int = 32,
-    rows_per_band: int | None = None,
+    *,
+    rows_per_band: int,
     hot_threshold: int | None = None,
 ) -> DataFrame:
     """Canonical candidate pairs (id_lo, id_hi, n_shared_bands).
@@ -65,10 +66,6 @@ def minhash_candidate_pairs(
     streaming shuffle-hash self-join over one reused exchange.
     """
     src = df.filter(F.col(sig_col).isNotNull())
-    if rows_per_band is None:
-        # infer from the first row at plan time is not possible; require caller
-        # config — default derived from common 128-sig
-        rows_per_band = 4
     bands = src.select(
         F.col(id_col).alias("_id"),
         F.explode(minhash_band_keys(sig_col, n_bands, rows_per_band)).alias(

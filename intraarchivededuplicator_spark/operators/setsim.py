@@ -102,7 +102,14 @@ def jaccard_self_join(
         F.size("_g") > 0
     ).persist(StorageLevel.MEMORY_AND_DISK)
     if strategy == "dense":
-        return _dense_join(d, threshold)
+        dense = _dense_join(d, threshold, dense_universe_max)
+        if dense is None:
+            d.unpersist()
+            raise ValueError(
+                f"strategy='dense' needs a gram universe of at most "
+                f"dense_universe_max={dense_universe_max} distinct grams"
+            )
+        return dense
     if strategy == "auto":
         # one HLL pass decides; approx_count_distinct (rsd 5%) costs a
         # partial-aggregate scan of the cache, never a wide exchange. The
@@ -118,21 +125,23 @@ def jaccard_self_join(
             .collect()[0]
         )
         if stats["nd"] <= dense_docs_max and stats["u"] <= dense_universe_max * 0.8:
-            dense = _dense_join(d, threshold, universe_max=dense_universe_max)
+            dense = _dense_join(d, threshold, dense_universe_max)
             if dense is not None:
                 return dense
     return _prefix_join(d, threshold)
 
 
 def _dense_join(
-    d: DataFrame, threshold: float, universe_max: int | None = None
+    d: DataFrame, threshold: float, universe_max: int
 ) -> DataFrame | None:
     """Bitmap all-pairs for tiny gram universes. Returns None when the exact
-    dictionary count exceeds ``universe_max`` (auto-mode HLL overshoot)."""
+    dictionary count exceeds ``universe_max`` (an auto-mode HLL overshoot,
+    or a forced dense strategy over too large a universe); the dictionary
+    collect stops at ``universe_max + 1`` grams either way."""
     dict_df = d.select(F.explode("_g").alias("gram")).distinct()
-    grams = sorted(r["gram"] for r in dict_df.collect())
+    grams = sorted(r["gram"] for r in dict_df.limit(universe_max + 1).collect())
     u = len(grams)
-    if universe_max is not None and u > universe_max:
+    if u > universe_max:
         return None
     spark = d.sparkSession
     if u == 0:

@@ -10,6 +10,7 @@ engine's public operator surface exercised on the shared tables — the
 from __future__ import annotations
 
 import hashlib
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
@@ -2485,36 +2486,91 @@ def q_stream_sessions_replay(spark, sf_dir):
     landing holds instants and the stream's cast("double") is TZ-free.
     Landing is ONE file = one ordered micro-batch; multi-batch equivalence
     is pinned in tests/test_streaming_sessions.py."""
-    import tempfile
-
     from ..streaming.sessionize_stream import stream_sessionize
 
     ev = load(spark, sf_dir, "events")
-    landing_df = ev.select(
+    landing = ev.select(
         F.col("user_id").cast("long").alias("user_id"),
         F.col("event_id").cast("long").alias("event_id"),
         F.timestamp_seconds(epoch_seconds_tz_free(ev, "ts")).alias("ts"),
     )
-    landing = tempfile.mkdtemp(prefix="sess_land_")
-    out_dir = tempfile.mkdtemp(prefix="sess_out_")
-    ckpt = tempfile.mkdtemp(prefix="sess_ckpt_")
-    landing_df.coalesce(1).write.mode("overwrite").parquet(landing)
-    stream = spark.readStream.schema(
-        "user_id long, event_id long, ts timestamp"
-    ).parquet(landing)
-    q = (
-        stream_sessionize(stream)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return _stream_replay(
+        spark,
+        "sess",
+        landing,
+        "user_id long, event_id long, ts timestamp",
+        stream_sessionize,
+        ("user_id", "event_id", "session_start_sec"),
+        one_file=True,
     )
-    q.awaitTermination()
-    return spark.read.parquet(out_dir).select(
-        "user_id", "event_id", "session_start_sec"
-    )
+
+
+# Replay landings are keyed by (url, warc_ts) synthesized from an integer id.
+# url is the id zero-padded to width 12: F.lpad TRUNCATES longer inputs, so a
+# narrower pad would silently corrupt ids at >= 10^width, and 12 digits keeps
+# lexicographic == numeric order (the streams' pair canonicalization) at the
+# design scale. warc_ts is id * 61 s plus a one-day shift: an event time equal
+# to the stream's INITIAL watermark (0 ms) is filtered as late by the state
+# operators, so id 0 would silently vanish. The shift cancels in every horizon
+# delta and the sinks subtract it on the way out.
+_REPLAY_URL_WIDTH = 12
+_REPLAY_T0 = 86_400
+_PAIR_SINK = (
+    "CAST(url_lo AS BIGINT) AS id_lo",
+    "CAST(url_hi AS BIGINT) AS id_hi",
+    "CAST(distance AS INT) AS distance",
+    f"CAST(pair_ts AS BIGINT) - {_REPLAY_T0} AS pair_ts_sec",
+)
+
+
+def _stream_replay(
+    spark, prefix, landing_df, schema, build, sink_exprs, *,
+    id_col=None, one_file=False,
+):
+    """Run `build` as a real availableNow Structured Streaming query over
+    `landing_df` replayed as a parquet landing zone, and return its parquet
+    sink projected by `sink_exprs`. The sink is materialized by a local
+    checkpoint, so its files can go (bounded: the gated result set; a
+    collect-and-recreate through the driver cost ~1.5 s more at 100k rows
+    on 4 local cores). `id_col`, when given, becomes the landing's url and
+    warc_ts (see _REPLAY_URL_WIDTH / _REPLAY_T0). `one_file` writes the
+    landing as ONE file, so the replay is a single ordered micro-batch.
+    The landing, sink and checkpoint scratch dirs are removed whether the
+    query succeeds or raises: each is corpus-sized and would otherwise
+    leak across repeated gate/bench sweeps."""
+    import shutil
+    import tempfile
+
+    dirs = [
+        tempfile.mkdtemp(prefix=f"{prefix}_{k}_") for k in ("land", "out", "ckpt")
+    ]
+    landing, out_dir, ckpt = dirs
+    try:
+        if id_col is not None:
+            i = F.col(id_col)
+            landing_df = landing_df.select(
+                F.lpad(i.cast("string"), _REPLAY_URL_WIDTH, "0").alias("url"),
+                F.timestamp_seconds(i * 61 + _REPLAY_T0).alias("warc_ts"),
+                *(c for c in landing_df.columns if c != id_col),
+            )
+        if one_file:
+            landing_df = landing_df.coalesce(1)
+        landing_df.write.mode("overwrite").parquet(landing)
+        stream = spark.readStream.schema(schema).parquet(landing)
+        (
+            build(stream)
+            .writeStream.format("parquet")
+            .option("path", out_dir)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+        return spark.read.parquet(out_dir).selectExpr(*sink_exprs).localCheckpoint()
+    finally:
+        for p in dirs:
+            shutil.rmtree(p, ignore_errors=True)
 
 
 def q_events_hourly_rate(spark, sf_dir):
@@ -3070,67 +3126,27 @@ def q_stream_near_dedup_replay(spark, sf_dir):
     q_near_pairs_within_horizon, so the SAME DuckDB oracle applies — the
     stream/batch equivalence tests/test_streaming_near_dedup.py pins is now
     also driver-hash-checked."""
-    import tempfile
-
     from ..streaming.ingest_stream import PAGES_SCHEMA
     from ..streaming.near_dedup_stream import stream_simhash_near_pairs
 
     d = load(spark, sf_dir, "documents")
-    # +86400 s: doc 0 at epoch 0 equals the stream's INITIAL watermark and
-    # would be filtered as late by the state operator (a pair involving doc 0
-    # would silently vanish); the shift cancels in every horizon delta and is
-    # subtracted from pair_ts on the way out.
     pages = d.select(
-        # width 12: F.lpad TRUNCATES longer inputs, so a 6-char pad would
-        # silently corrupt ids at >= 10^6 docs; 12 digits covers the
-        # design scale and keeps lexicographic == numeric order
-        F.lpad(F.col("doc_id").cast("string"), 12, "0").alias("url"),
-        F.timestamp_seconds(F.col("doc_id") * 61 + 86400).alias("warc_ts"),
-        F.lit(None).cast("binary").alias("html"),
-        "text",
-        F.col("lang"),
+        "doc_id", F.lit(None).cast("binary").alias("html"), "text", "lang"
     )
-    landing = tempfile.mkdtemp(prefix="snd_land_")
-    out_dir = tempfile.mkdtemp(prefix="snd_out_")
-    ckpt = tempfile.mkdtemp(prefix="snd_ckpt_")
-    pages.write.mode("overwrite").parquet(landing)
-    stream = spark.readStream.schema(PAGES_SCHEMA).parquet(landing)
-    q = (
-        stream_simhash_near_pairs(
-            stream,
+    return _stream_replay(
+        spark,
+        "snd",
+        pages,
+        PAGES_SCHEMA,
+        partial(
+            stream_simhash_near_pairs,
             radius=SIMHASH_RADIUS,
             watermark="48 hours",
             horizon=f"{NEAR_HORIZON_SEC} seconds",
             extract=False,
-        )
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return _drain_replay_sink(spark, out_dir, (landing, out_dir, ckpt))
-
-
-def _drain_replay_sink(spark, out_dir, tmp_dirs):
-    """Materialize a replay sink (bounded: the gated pair set) and delete
-    the scratch dirs — the sink, landing copy, and checkpoint would
-    otherwise leak a corpus-sized parquet per invocation across the
-    repeated gate/bench sweeps."""
-    import shutil
-
-    rows = spark.read.parquet(out_dir).select(
-        F.col("url_lo").cast("long").alias("id_lo"),
-        F.col("url_hi").cast("long").alias("id_hi"),
-        F.col("distance").cast("int").alias("distance"),
-        (F.col("pair_ts").cast("long") - 86400).alias("pair_ts_sec"),
-    ).collect()
-    for p in tmp_dirs:
-        shutil.rmtree(p, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "id_lo long, id_hi long, distance int, pair_ts_sec long"
+        ),
+        _PAIR_SINK,
+        id_col="doc_id",
     )
 
 
@@ -3145,47 +3161,31 @@ def q_stream_exact_dedup_replay(spark, sf_dir):
     recomputes the set exactly. The landing is written as ONE file so the
     replay is a single ordered micro-batch (the rule's arrival-order premise);
     multi-batch equivalence is pinned in tests/test_streaming_exact_dedup.py."""
-    import tempfile
-
     from ..streaming.exact_dedup_stream import stream_exact_dedup
     from ..streaming.ingest_stream import PAGES_SCHEMA
 
     d = load(spark, sf_dir, "documents")
-    # +86400 s shifts doc 0 off epoch 0: an event time equal to the stream's
-    # INITIAL watermark (0 ms) is filtered as late by the state operator, so
-    # the synthetic clock starts a day in; the shift cancels in every gap the
-    # survivor rule evaluates and is subtracted when mapping back below.
     pages = d.select(
-        F.lpad(F.col("doc_id").cast("string"), 6, "0").alias("url"),
-        F.timestamp_seconds(F.col("doc_id") * 61 + 86400).alias("warc_ts"),
-        F.lit(None).cast("binary").alias("html"),
-        "text",
-        F.col("lang"),
+        "doc_id", F.lit(None).cast("binary").alias("html"), "text", "lang"
     )
-    landing = tempfile.mkdtemp(prefix="sed_land_")
-    out_dir = tempfile.mkdtemp(prefix="sed_out_")
-    ckpt = tempfile.mkdtemp(prefix="sed_ckpt_")
-    pages.coalesce(1).write.mode("overwrite").parquet(landing)
-    stream = spark.readStream.schema(PAGES_SCHEMA).parquet(landing)
-    q = (
-        stream_exact_dedup(
-            stream,
+    return _stream_replay(
+        spark,
+        "sed",
+        pages,
+        PAGES_SCHEMA,
+        partial(
+            stream_exact_dedup,
             watermark="48 hours",
             horizon=f"{NEAR_HORIZON_SEC} seconds",
             extract=False,
-        )
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out_dir).select(
-        F.col("url").cast("long").alias("doc_id"),
-        "text_hash",
-        (F.col("warc_ts").cast("long") - 86400).alias("ts_sec"),
+        ),
+        (
+            "CAST(url AS BIGINT) AS doc_id",
+            "text_hash",
+            f"CAST(warc_ts AS BIGINT) - {_REPLAY_T0} AS ts_sec",
+        ),
+        id_col="doc_id",
+        one_file=True,
     )
 
 
@@ -3393,6 +3393,27 @@ def q_gram_novelty_by_batch(spark, sf_dir):
     )
 
 
+def _signal_legs(spark, sf_dir):
+    """(docs, exact, simhash, minhash): the three signature families' edge
+    legs as (id_lo, id_hi) — exact md5 text, banded SimHash (r=SIMHASH_RADIUS,
+    degenerate-blacklisted) and MinHash-LSH bands (the gated
+    minhash_band_pairs geometry, 4x4) — all over ONE persisted signature
+    projection, so each family is computed once whatever the legs feed."""
+    mh = make_minhash_udf(K_SHINGLE, ORACLE_MINHASH)
+    d = with_text_hash(docs_with_sig(spark, sf_dir)).withColumn(
+        "minhash", mh(F.col("text"))
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ex = exact_pairs(d, "doc_id", "text_hash").select("id_lo", "id_hi")
+    near = banded_self_join(
+        d, "doc_id", "simhash", SIMHASH_RADIUS, blacklist=(0,)
+    ).select("id_lo", "id_hi")
+    mhp = minhash_candidate_pairs(
+        d.select("doc_id", "minhash"), "doc_id", "minhash",
+        n_bands=4, rows_per_band=4,
+    ).select("id_lo", "id_hi")
+    return d, ex, near, mhp
+
+
 def q_multi_signal_clusters(spark, sf_dir):
     """The FULL multi-signal dedup graph: exact (md5 text), near (banded
     SimHash, r=SIMHASH_RADIUS, degenerate-blacklisted) and MinHash-LSH band
@@ -3408,18 +3429,7 @@ def q_multi_signal_clusters(spark, sf_dir):
     exchange-free; connected components bounded-driver or alternating-star;
     one shuffle-hash join assigns the corpus. Cost is the sum of the legs —
     no leg is recomputed (one signature projection feeds simhash + minhash)."""
-    mh = make_minhash_udf(K_SHINGLE, ORACLE_MINHASH)
-    d = with_text_hash(docs_with_sig(spark, sf_dir)).withColumn(
-        "minhash", mh(F.col("text"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    near = banded_self_join(
-        d, "doc_id", "simhash", SIMHASH_RADIUS, blacklist=(0,)
-    ).select("id_lo", "id_hi")
-    ex = exact_pairs(d, "doc_id", "text_hash").select("id_lo", "id_hi")
-    mhp = minhash_candidate_pairs(
-        d.select("doc_id", "minhash"), "doc_id", "minhash",
-        n_bands=4, rows_per_band=4,
-    ).select("id_lo", "id_hi")
+    d, ex, near, mhp = _signal_legs(spark, sf_dir)
     edges = ex.unionByName(near).unionByName(mhp)
     return assign_clusters(
         d.select(F.col("doc_id").alias("id")), edges
@@ -3439,20 +3449,9 @@ def q_dedup_ablation(spark, sf_dir):
     the previous one's edge frames (union is exchange-free), so the total
     cost is the three edge legs + three bounded CC closures — NOT 3x the
     pipeline. Outputs are 3 rows by construction."""
-    mh = make_minhash_udf(K_SHINGLE, ORACLE_MINHASH)
-    d = with_text_hash(docs_with_sig(spark, sf_dir)).withColumn(
-        "minhash", mh(F.col("text"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    d, ex, near, mhp = _signal_legs(spark, sf_dir)
     n_docs = d.count()
     ids = d.select(F.col("doc_id").alias("id"))
-    ex = exact_pairs(d, "doc_id", "text_hash").select("id_lo", "id_hi")
-    near = banded_self_join(
-        d, "doc_id", "simhash", SIMHASH_RADIUS, blacklist=(0,)
-    ).select("id_lo", "id_hi")
-    mhp = minhash_candidate_pairs(
-        d.select("doc_id", "minhash"), "doc_id", "minhash",
-        n_bands=4, rows_per_band=4,
-    ).select("id_lo", "id_hi")
     configs = [
         ("1_exact", ex),
         ("2_exact+simhash", ex.unionByName(near)),
@@ -3897,22 +3896,11 @@ def q_signal_agreement(spark, sf_dir):
     shapes (hash-groupBy / banded joins); the union is exchange-free; one
     exchange groups by canonical pair to fold the bitmask; everything
     after is over <= 7 mask rows crossed with 3 literal family rows."""
-    mhu = make_minhash_udf(K_SHINGLE, ORACLE_MINHASH)
-    d = with_text_hash(docs_with_sig(spark, sf_dir)).withColumn(
-        "minhash", mhu(F.col("text"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    ex = exact_pairs(d, "doc_id", "text_hash").select(
-        "id_lo", "id_hi", F.lit(1).alias("m")
-    )
-    near = banded_self_join(
-        d, "doc_id", "simhash", SIMHASH_RADIUS, blacklist=(0,)
-    ).select("id_lo", "id_hi", F.lit(2).alias("m"))
-    mhp = minhash_candidate_pairs(
-        d.select("doc_id", "minhash"), "doc_id", "minhash",
-        n_bands=4, rows_per_band=4,
-    ).select("id_lo", "id_hi", F.lit(4).alias("m"))
+    _, ex, near, mhp = _signal_legs(spark, sf_dir)
     mask = (
-        ex.unionByName(near).unionByName(mhp)
+        ex.withColumn("m", F.lit(1))
+        .unionByName(near.withColumn("m", F.lit(2)))
+        .unionByName(mhp.withColumn("m", F.lit(4)))
         .groupBy("id_lo", "id_hi")
         .agg(F.sum("m").cast("long").alias("mask"))
     )
@@ -4086,43 +4074,25 @@ def q_stream_embedding_near_dup_replay(spark, sf_dir):
     pigeonhole-exactly the Hamming-radius pairs within the horizon, so
     the DuckDB oracle is brute force over SQL-recomputed hyperplane
     signatures — hash-exact, not recall-statistical."""
-    import tempfile
-
     from ..streaming.near_dedup_stream import stream_embedding_near_pairs
 
     emb = load(spark, sf_dir, "embeddings")
-    vecs = emb.select(
-        # width 12, not 6: F.lpad truncates longer inputs (see the text
-        # twin) — a 7-digit vec_id would silently collide at width 6
-        F.lpad(F.col("vec_id").cast("string"), 12, "0").alias("url"),
-        F.timestamp_seconds(F.col("vec_id") * 61 + 86400).alias("warc_ts"),
-        "embedding",
-    )
-    landing = tempfile.mkdtemp(prefix="sev_land_")
-    out_dir = tempfile.mkdtemp(prefix="sev_out_")
-    ckpt = tempfile.mkdtemp(prefix="sev_ckpt_")
-    vecs.write.mode("overwrite").parquet(landing)
-    stream = spark.readStream.schema(
-        "url string, warc_ts timestamp, embedding array<float>"
-    ).parquet(landing)
-    q = (
-        stream_embedding_near_pairs(
-            stream,
+    return _stream_replay(
+        spark,
+        "sev",
+        emb.select("vec_id", "embedding"),
+        "url string, warc_ts timestamp, embedding array<float>",
+        partial(
+            stream_embedding_near_pairs,
             dim=EMB_DIM,
             radius=EMB_STREAM_RADIUS,
             n_bands=EMB_STREAM_BANDS,
             watermark="48 hours",
             horizon=f"{NEAR_HORIZON_SEC} seconds",
-        )
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        ),
+        _PAIR_SINK,
+        id_col="vec_id",
     )
-    q.awaitTermination()
-    return _drain_replay_sink(spark, out_dir, (landing, out_dir, ckpt))
 
 
 def q_incremental_embedding_near_pairs(spark, sf_dir):

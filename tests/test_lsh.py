@@ -54,6 +54,12 @@ def test_bucket_plan_matches_join_plan(sig_df):
     assert a == b
 
 
+def test_rows_per_band_is_required(sig_df):
+    """No silent default band geometry: the caller states rows per band."""
+    with pytest.raises(TypeError, match="rows_per_band"):
+        minhash_candidate_pairs(sig_df, n_bands=32)
+
+
 def test_hot_cap_matches_reference_filter(sig_df):
     thr = 30
     got = _pairs(

@@ -121,3 +121,15 @@ def test_auto_picks_prefix_on_large_universe(spark):
     assert "BroadcastNestedLoopJoin" not in plan
     # and it still finds the planted near-dup pairs
     assert out.count() >= 40
+
+
+def test_forced_dense_over_universe_cap_raises(spark):
+    """strategy="dense" must refuse a gram universe above its cap instead of
+    collecting an unbounded dictionary to the driver."""
+    docs = spark.createDataFrame(_corpus(), "doc_id long, text string").select(
+        "doc_id", F.array_distinct(char_ngrams("text", 3)).alias("grams")
+    )
+    with pytest.raises(ValueError, match="dense_universe_max=16"):
+        jaccard_self_join(
+            docs, "doc_id", "grams", 0.5, strategy="dense", dense_universe_max=16
+        )

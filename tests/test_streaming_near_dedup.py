@@ -326,7 +326,7 @@ class TestStreamingEmbeddingNearDedup:
             chunk = emb_rows[i * n // 4 : (i + 1) * n // 4]
             rows = [
                 (
-                    f"{vid:06d}",
+                    f"{vid:012d}",
                     dt.datetime.fromtimestamp(vid * 61 + 86_400, dt.timezone.utc),
                     vec,
                 )

@@ -16,14 +16,13 @@ Usage: python tools/check_oracles.py [query_name ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
-
-import os
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("CHECK_SF_DIR", "/root/testdata/sf0.01")
 TABLES = [
@@ -98,12 +97,8 @@ def main():
             failures.append((name, f"spark error: {ex}"))
             print(f"FAIL {name}: spark error: {str(ex)[:300]}")
             continue
-        sql = os_.get(name)
-        if sql is None:
-            print(f"SKIP {name}: no oracle ({len(spdf)} rows)")
-            continue
         try:
-            opdf = con.sql(sql).df()
+            opdf = con.sql(os_[name]).df()
         except Exception as ex:
             failures.append((name, f"duckdb error: {ex}"))
             print(f"FAIL {name}: duckdb error: {str(ex)[:300]}")
