@@ -40,7 +40,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
-from pyspark.storagelevel import StorageLevel
 
 from .charlm import CHARLM_Q, lp_table
 from .columns import md5_prefix_mod, tokens
@@ -76,12 +75,14 @@ def dsir_weights(
         "doc_id", "_is_t", dsir_bucket(F.col("_tok"), n_buckets).alias("b")
     )
     # per-(doc, bucket) counts feed BOTH the bucket profile and the final
-    # score join — persist so tokenize+hash runs once (<= n_buckets rows
-    # per doc, spill-safe)
+    # score join — a local checkpoint runs tokenize+hash once (<= n_buckets
+    # rows per doc, spill-safe). Unlike persist(), it registers nothing with
+    # the session's cache manager: the ContextCleaner frees its blocks once
+    # the returned frame is no longer referenced.
     db = (
         tok.groupBy("doc_id", "_is_t", "b")
         .agg(F.count("*").alias("n"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint()
     )
     bc = db.groupBy("b").agg(
         F.sum("n").alias("c_r"),

@@ -10,6 +10,9 @@ engine's public operator surface exercised on the shared tables — the
 from __future__ import annotations
 
 import hashlib
+import shutil
+import tempfile
+from contextlib import contextmanager
 from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -56,6 +59,19 @@ LANG_MARKERS = {
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+@contextmanager
+def _scratch_dirs(*prefixes: str):
+    """One fresh temp dir per prefix, removed on exit whether the body
+    returns or raises. A query that writes to them returns a local
+    checkpoint, so its result no longer reads the files."""
+    dirs = [tempfile.mkdtemp(prefix=p) for p in prefixes]
+    try:
+        yield dirs
+    finally:
+        for d in dirs:
+            shutil.rmtree(d, ignore_errors=True)
 
 
 def docs_with_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2538,14 +2554,9 @@ def _stream_replay(
     The landing, sink and checkpoint scratch dirs are removed whether the
     query succeeds or raises: each is corpus-sized and would otherwise
     leak across repeated gate/bench sweeps."""
-    import shutil
-    import tempfile
-
-    dirs = [
-        tempfile.mkdtemp(prefix=f"{prefix}_{k}_") for k in ("land", "out", "ckpt")
-    ]
-    landing, out_dir, ckpt = dirs
-    try:
+    with _scratch_dirs(
+        *(f"{prefix}_{k}_" for k in ("land", "out", "ckpt"))
+    ) as (landing, out_dir, ckpt):
         if id_col is not None:
             i = F.col(id_col)
             landing_df = landing_df.select(
@@ -2568,9 +2579,6 @@ def _stream_replay(
             .awaitTermination()
         )
         return spark.read.parquet(out_dir).selectExpr(*sink_exprs).localCheckpoint()
-    finally:
-        for p in dirs:
-            shutil.rmtree(p, ignore_errors=True)
 
 
 def q_events_hourly_rate(spark, sf_dir):
@@ -2828,32 +2836,32 @@ def q_catalog_merge_roundtrip(spark, sf_dir):
     doc_id % 7 == 0, and doc_id + 100000 rows insert where doc_id % 50 == 0),
     then doc_id % 13 == 3 rows are deleted (S9). The returned snapshot read
     (C5) must equal the oracle's set-algebra reconstruction of the same
-    mutations. The temp dir is left in place — the returned DataFrame reads
-    it lazily and the driver collects after this function returns."""
-    import tempfile
-
+    mutations. The catalog's temp dir is removed before returning, on
+    success and on error: the snapshot is materialized by a local
+    checkpoint first."""
     from ..sources.catalog import ParquetCatalog
 
-    cat = ParquetCatalog(spark, tempfile.mkdtemp(prefix="cat_rt_"))
-    cat.set_bucket_spec("docs", ["doc_id"], 8)
-    base = load(spark, sf_dir, "documents").select(
-        "doc_id", "lang", F.length("text").cast("long").alias("n_chars")
-    )
-    # the +100000 insert keys must be disjoint from base keys, or the merge
-    # upserts where the oracle's UNION ALL keeps both — fail fast, not hash-
-    # mismatch, if a future corpus breaks the assumption
-    max_id = base.agg(F.max("doc_id")).first()[0]
-    assert max_id < 100_000, f"insert-key offset collides: max doc_id {max_id}"
-    cat.append(base, "docs")
-    updates = base.filter(F.col("doc_id") % 7 == 0).withColumn("lang", F.lit("xx"))
-    inserts = base.filter(F.col("doc_id") % 50 == 0).select(
-        (F.col("doc_id") + 100000).alias("doc_id"),
-        F.lit("new").alias("lang"),
-        (F.col("doc_id") % 997).cast("long").alias("n_chars"),
-    )
-    cat.merge(updates.unionByName(inserts), "docs", ["doc_id"])
-    cat.delete_where("docs", F.col("doc_id") % 13 == 3)
-    return cat.read("docs").select("doc_id", "lang", "n_chars")
+    with _scratch_dirs("cat_rt_") as (root,):
+        cat = ParquetCatalog(spark, root)
+        cat.set_bucket_spec("docs", ["doc_id"], 8)
+        base = load(spark, sf_dir, "documents").select(
+            "doc_id", "lang", F.length("text").cast("long").alias("n_chars")
+        )
+        # the +100000 insert keys must be disjoint from base keys, or the
+        # merge upserts where the oracle's UNION ALL keeps both — fail fast,
+        # not hash-mismatch, if a future corpus breaks the assumption
+        max_id = base.agg(F.max("doc_id")).first()[0]
+        assert max_id < 100_000, f"insert-key offset collides: max doc_id {max_id}"
+        cat.append(base, "docs")
+        updates = base.filter(F.col("doc_id") % 7 == 0).withColumn("lang", F.lit("xx"))
+        inserts = base.filter(F.col("doc_id") % 50 == 0).select(
+            (F.col("doc_id") + 100000).alias("doc_id"),
+            F.lit("new").alias("lang"),
+            (F.col("doc_id") % 997).cast("long").alias("n_chars"),
+        )
+        cat.merge(updates.unionByName(inserts), "docs", ["doc_id"])
+        cat.delete_where("docs", F.col("doc_id") % 13 == 3)
+        return cat.read("docs").select("doc_id", "lang", "n_chars").localCheckpoint()
 
 
 def q_html_extract_roundtrip(spark, sf_dir):
@@ -2917,9 +2925,8 @@ def q_incremental_ingest_roundtrip(spark, sf_dir):
     listing where doc_id % 9 == 0 texts changed (re-signatured via the
     anti-join delta) and doc_id % 11 == 5 urls vanished (orphan-pruned).
     The returned docs state is set algebra over documents for the oracle;
-    n_tokens proves the changed rows were genuinely re-computed."""
-    import tempfile
-
+    n_tokens proves the changed rows were genuinely re-computed. The temp
+    catalog is removed before returning, as in q_catalog_merge_roundtrip."""
     from ..sources.catalog import ParquetCatalog
     from ..sources.ingest import incremental_ingest
 
@@ -2934,18 +2941,21 @@ def q_incremental_ingest_roundtrip(spark, sf_dir):
             F.col("lang"),
         )
 
-    cat = ParquetCatalog(spark, tempfile.mkdtemp(prefix="ing_rt_"))
-    incremental_ingest(spark, cat, pages(d), extract=False)
-    d2 = d.filter(F.col("doc_id") % 11 != 5).withColumn(
-        "text",
-        F.when(
-            F.col("doc_id") % 9 == 0, F.concat(F.col("text"), F.lit(" changed"))
-        ).otherwise(F.col("text")),
-    )
-    final = incremental_ingest(
-        spark, cat, pages(d2), extract=False, full_listing=True
-    )
-    return final.select("url", F.col("n_tokens").cast("long").alias("n_tokens"))
+    with _scratch_dirs("ing_rt_") as (root,):
+        cat = ParquetCatalog(spark, root)
+        incremental_ingest(spark, cat, pages(d), extract=False)
+        d2 = d.filter(F.col("doc_id") % 11 != 5).withColumn(
+            "text",
+            F.when(
+                F.col("doc_id") % 9 == 0, F.concat(F.col("text"), F.lit(" changed"))
+            ).otherwise(F.col("text")),
+        )
+        final = incremental_ingest(
+            spark, cat, pages(d2), extract=False, full_listing=True
+        )
+        return final.select(
+            "url", F.col("n_tokens").cast("long").alias("n_tokens")
+        ).localCheckpoint()
 
 
 def q_junk_flags(spark, sf_dir):
@@ -3397,12 +3407,15 @@ def _signal_legs(spark, sf_dir):
     """(docs, exact, simhash, minhash): the three signature families' edge
     legs as (id_lo, id_hi) — exact md5 text, banded SimHash (r=SIMHASH_RADIUS,
     degenerate-blacklisted) and MinHash-LSH bands (the gated
-    minhash_band_pairs geometry, 4x4) — all over ONE persisted signature
-    projection, so each family is computed once whatever the legs feed."""
+    minhash_band_pairs geometry, 4x4) — all over ONE locally checkpointed
+    signature projection, so each family is computed once whatever the legs
+    feed. The checkpoint's blocks are freed by the ContextCleaner once the
+    query's result is dropped; a persist() would hold them in the session's
+    cache manager for the life of the session."""
     mh = make_minhash_udf(K_SHINGLE, ORACLE_MINHASH)
     d = with_text_hash(docs_with_sig(spark, sf_dir)).withColumn(
         "minhash", mh(F.col("text"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).localCheckpoint()
     ex = exact_pairs(d, "doc_id", "text_hash").select("id_lo", "id_hi")
     near = banded_self_join(
         d, "doc_id", "simhash", SIMHASH_RADIUS, blacklist=(0,)

@@ -5,7 +5,9 @@ so every `q_<name>` in plans.queries must have an oracle entry and every
 oracle entry a `q_<name>`. The four streaming replays share one harness that
 writes a landing zone, runs an availableNow query and materializes its sink;
 these tests pin that it maps ids past six digits back exactly and leaves no
-scratch dir behind, whether the stream succeeds or raises.
+scratch dir behind, whether the stream succeeds or raises. The two catalog
+roundtrips are held to the same rule, and the queries that reuse one
+intermediate table across legs must leave nothing in the session's cache.
 """
 
 from __future__ import annotations
@@ -20,6 +22,7 @@ import pytest
 import __spark_entry__ as entry
 from intraarchivededuplicator_spark.plans import oracle
 from intraarchivededuplicator_spark.plans import queries as q
+from intraarchivededuplicator_spark.sources.catalog import ParquetCatalog
 
 # replay query -> (scratch-dir prefix, stream builder module, builder name)
 REPLAYS = {
@@ -52,11 +55,9 @@ def test_every_query_has_an_oracle_and_every_oracle_a_query():
     assert fns == set(entry.oracle_sql()) == set(entry.queries())
 
 
-@pytest.fixture(scope="module")
-def sf_dir(tmp_path_factory):
-    """A tiny sf dir in the testdata schema. Documents carry 7-digit ids
-    with two exact duplicates and one one-word edit within the horizon."""
-    d = tmp_path_factory.mktemp("sf")
+def _write_documents(d, first_id: int):
+    """Eight documents, ids from first_id, with two exact duplicates and one
+    one-word edit within the horizon. Returns the open DuckDB connection."""
     rng = random.Random(7)
     vocab = [f"w{i}" for i in range(300)]
     base = [" ".join(rng.choice(vocab) for _ in range(60)) for _ in range(5)]
@@ -71,9 +72,17 @@ def sf_dir(tmp_path_factory):
     )
     con.executemany(
         "INSERT INTO documents VALUES (?, ?, 'en', 'src1', ?)",
-        [(BIG_ID + i, t, len(t)) for i, t in enumerate(texts)],
+        [(first_id + i, t, len(t)) for i, t in enumerate(texts)],
     )
     con.execute(f"COPY documents TO '{d}/documents.parquet' (FORMAT PARQUET)")
+    return con
+
+
+@pytest.fixture(scope="module")
+def sf_dir(tmp_path_factory):
+    """A tiny sf dir in the testdata schema, with 7-digit document ids."""
+    d = tmp_path_factory.mktemp("sf")
+    con = _write_documents(d, BIG_ID)
     con.execute(
         f"COPY (SELECT i % 3 AS user_id, i AS event_id, "
         f"TIMESTAMP '2024-01-01' + to_seconds(i * 700) AS ts FROM range(30) t(i)) "
@@ -140,3 +149,48 @@ def test_failed_replay_leaves_no_scratch_dir(
     with pytest.raises(RuntimeError, match="stream builder failed"):
         getattr(q, "q_" + name)(spark, str(sf_dir))
     assert _leftovers(scratch, name) == []
+
+
+# catalog roundtrip query -> its temp catalog's dir prefix
+ROUNDTRIPS = {
+    "catalog_merge_roundtrip": "cat_rt_",
+    "incremental_ingest_roundtrip": "ing_rt_",
+}
+
+
+@pytest.fixture(scope="module")
+def small_sf_dir(tmp_path_factory):
+    """Documents with ids below the catalog roundtrip's insert-key offset."""
+    d = tmp_path_factory.mktemp("sf_small")
+    _write_documents(d, 0)
+    return d
+
+
+@pytest.mark.parametrize("name", sorted(ROUNDTRIPS))
+def test_roundtrip_leaves_no_scratch_dir(spark, small_sf_dir, scratch, name):
+    assert getattr(q, "q_" + name)(spark, str(small_sf_dir)).collect()
+    assert list(scratch.glob(ROUNDTRIPS[name] + "*")) == []
+
+
+@pytest.mark.parametrize("name", sorted(ROUNDTRIPS))
+def test_failed_roundtrip_leaves_no_scratch_dir(
+    spark, small_sf_dir, scratch, monkeypatch, name
+):
+    def broken(*args, **kwargs):
+        raise RuntimeError("merge failed")
+
+    monkeypatch.setattr(ParquetCatalog, "merge", broken)
+    with pytest.raises(RuntimeError, match="merge failed"):
+        getattr(q, "q_" + name)(spark, str(small_sf_dir))
+    assert list(scratch.glob(ROUNDTRIPS[name] + "*")) == []
+
+
+def test_shared_legs_leave_the_cache_empty(spark, sf_dir):
+    """dsir_weights and the signal-leg queries reuse one intermediate table;
+    a persist() of it stayed in the cache manager for the whole session."""
+    spark.catalog.clearCache()  # drop what earlier test modules cached
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.isEmpty()
+    for name in ("dsir_weights", "multi_signal_clusters"):
+        assert getattr(q, "q_" + name)(spark, str(sf_dir)).collect()
+    assert cache.isEmpty()

@@ -4,7 +4,13 @@ The per-row invariant from BASELINE input_hint; analog of the reference's
 pHash/MD5 per-member goldens (/root/reference/Tests/Test_phashArch.py:25-99).
 """
 
+import html as _html
+import re
+import time
+
 import numpy as np
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from intraarchivededuplicator_spark.fixtures.synth import (
     TEMPLATES,
@@ -12,7 +18,10 @@ from intraarchivededuplicator_spark.fixtures.synth import (
     render_html,
 )
 from intraarchivededuplicator_spark.functions.suffix import sa_contains, suffix_array
-from intraarchivededuplicator_spark.functions.textprep import extract_text_py
+from intraarchivededuplicator_spark.functions.textprep import (
+    extract_text_py,
+    strip_script_style,
+)
 
 
 class TestExtractionRoundTrip:
@@ -41,6 +50,95 @@ class TestExtractionRoundTrip:
         c = gen_pages(300, seed=7)
         for _, row in c.pages.iterrows():
             assert extract_text_py(row["html"]) == row["text"], row["url"]
+
+
+# The regex extractor the linear scans replaced: the differential oracle.
+_MAIN_RE = re.compile(rb"<main(?:\s[^>]*)?>(.*?)</main>", re.DOTALL)
+_SCRIPT_RE = re.compile(r"<(script|style)\b[^>]*>.*?</\1>", re.DOTALL | re.IGNORECASE)
+_TAG_RE = re.compile(r"<[^>]+>")
+_WS_RE = re.compile(r"\s+")
+
+
+def _regex_extract(html_bytes: bytes) -> str:
+    m = _MAIN_RE.search(html_bytes)
+    if m is not None:
+        return _html.unescape(m.group(1).decode("utf-8", errors="replace"))
+    raw = html_bytes.decode("utf-8", errors="replace")
+    raw = _TAG_RE.sub(" ", _SCRIPT_RE.sub(" ", raw))
+    return _WS_RE.sub(" ", _html.unescape(raw)).strip()
+
+
+# per-letter spellings an IGNORECASE tag name may use, including the
+# non-ASCII letters that case-fold onto ASCII ones
+_SPELLINGS = {"s": "sSſ", "i": "iIİı"}
+
+
+@st.composite
+def _tag(draw):
+    name = draw(st.sampled_from(["script", "style", "main", "scripts", "b"]))
+    name = "".join(draw(st.sampled_from(_SPELLINGS.get(c, c + c.upper()))) for c in name)
+    head = draw(st.sampled_from(["<", "</"]))
+    tail = draw(st.sampled_from(
+        ["", ">", " ", " a='x'>", "/>", "x>", "\n>", "\t", "\r", "\x0b>", "\x0c>", "\x1c>"]
+    ))
+    return head + name + tail
+
+
+_HTML = st.lists(
+    st.one_of(
+        _tag(),
+        st.sampled_from(["<", ">", " ", "text", "&amp;", "\n", "é"]),
+        st.text(max_size=4),
+    ),
+    max_size=40,
+).map("".join)
+
+
+class TestHostileHtml:
+    """The linear scans return exactly what the regexes did, and a page of
+    unclosed tags costs time linear in its length."""
+
+    @settings(max_examples=1000, deadline=None)
+    @given(_HTML)
+    def test_strip_script_style_matches_regex(self, raw):
+        assert strip_script_style(raw) == _SCRIPT_RE.sub(" ", raw)
+
+    @settings(max_examples=1000, deadline=None)
+    @given(st.one_of(_HTML.map(str.encode), st.binary(max_size=64)))
+    def test_extract_matches_regex(self, page):
+        assert extract_text_py(page) == _regex_extract(page)
+
+    def test_extract_examples_match_regex(self):
+        pages = [
+            "<script>a</SCRIPT>b<style x>c</style>d",
+            "<script>a<script>b</script>c</script>",
+            "<ſcript>a</script>b</ſcript>c",
+            "<scrİpt>a</SCRIPT>b<scrıpt>c</script>d</scrıpt>",
+            "<style>a</script>b</style>",
+            "<scripts>a</scripts><script/>b</script>",
+            "<main <main>a</main>",
+            "<main\tx>a</main>b",
+            "<main\x0bx>a</main>b<main\x1c>c</main>",
+            "<mainx>a</main><main>b</main>",
+            "x <y",
+        ]
+        for p in pages:
+            b = p.encode()
+            assert extract_text_py(b) == _regex_extract(b), p
+
+    def test_unclosed_tags_are_linear(self):
+        filler = " word" * 6
+        for tag in ("<script>", "<style>", "<main>", "<main ", "<"):
+            page = ("<html><body>" + (tag + filler) * 4000).encode()
+            assert len(page) > 100_000
+            best = min(_time(extract_text_py, page) for _ in range(3))
+            assert best < 0.1, (tag, best)
+
+
+def _time(f, arg) -> float:
+    t = time.perf_counter()
+    f(arg)
+    return time.perf_counter() - t
 
 
 class TestSynthCorpus:
