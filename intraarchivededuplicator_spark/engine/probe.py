@@ -2,43 +2,161 @@
 
 The reference runs a long-lived server holding a singleton in-process BK-tree
 and answers one pHash probe per RPC (`single_phash_search` /
-`processDownload`, /root/reference/server/server.py:31-53; tree reload at
-:136-144). The batch analog in this repo is operators/banded_join.
-banded_radius_search — correct, but it re-explodes the corpus into its band
-table on EVERY call, which is the wrong shape for an interactive "is this
-new download a dup?" probe stream.
+`processDownload`, server/server.py:31-53 of the reference; tree reload at
+:136-144). ProbeSession is that resident index, held in the driver as an
+immutable numpy snapshot of the corpus:
 
-ProbeSession is the resident index: explode the corpus once into the banded
-layout, hash-repartition it on (band_id, band_key) — the same layout the
-join-based search shuffles into — and persist it. A probe then computes its
-own band keys DRIVER-SIDE (functions/hashing.band_keys_np, the bit-exact
-numpy mirror of the JVM band expression) and runs a narrow filter +
-bit_count verify over the cached table: no corpus re-scan, no shuffle, no
-join. At cluster scale the persisted band table lives across executors and a
-probe is one short cached-scan job; on a 12M-hash corpus this is the
-moral equivalent of the reference's ~5 GB resident tree (README.md:15-16),
-except the "tree" is just cached DataFrame state with no driver memory cost.
+  ids, sigs   int64 (n,)            one entry per non-null (id, sig) row
+  keys        int64 (n * n_bands,)  every row's combined band keys, sorted
+  rows        int64 (n * n_bands,)  the row of ids/sigs each key came from
 
-Mutation follows the repo-wide immutable-snapshot discipline (SURVEY §2.9:
-RW locks are n/a by design): insert()/remove() build a NEW persisted band
-table and atomically swap the reference, mirroring the reference server's
-whole-tree reload rather than its fine-grained locked inserts. The old
-snapshot is unpersisted after the swap; in-flight probes on it still
-complete (Spark caches are refcounted by plan, not mutated in place).
+The combined key is `band_id << 33 | band_key`. A band key is a logical
+(zero-fill) slice of at most 32 bits whenever n_bands > 1, so the combined
+key is collision-free across bands and sorts by (band_id, band_key); with one
+band it is the signature itself. A probe computes its own band keys with
+functions/hashing.band_keys_np (the bit-exact numpy mirror of the JVM band
+expression), finds each key's run of rows with `np.searchsorted`, and keeps
+the candidates whose exact distance `popcount64_np(sig ^ sigs[rows])` is
+within the radius. n_bands > radius makes this pigeonhole-exact: r differing
+bits leave at least one band untouched. No Spark job runs for `search`.
+`search_batch`, `insert` and `refresh` collect their input frame: without a
+job when it is local (built from driver data), with one otherwise.
 
-Every result is verified exact Hamming distance — same contract as
-banded_radius_search, differentially pinned against it in tests.
+Memory: (2 + 2·n_bands)·8 B per signature. At radius 4 (5 bands) that is
+≈96 MB at 1M signatures and ≈1.15 GB at the reference's 12M hashes, where the
+reference's tree takes ~5 GB. An index past one driver's memory needs the
+partitioned design of REPOSE (ICDE 2021): a local index per partition, with
+probes routed to the partitions that can hold a match. Corpus-scale all-pairs
+search stays with operators/banded_join (banded_self_join,
+banded_radius_search), which never collects the corpus.
+
+Mutation follows the repo-wide immutable-snapshot discipline (SURVEY §2.9):
+insert/remove/refresh build a NEW snapshot and swap one reference, so an
+in-flight search finishes on the snapshot it started on. insert merges the
+new rows' sorted keys into the old arrays (a linear copy, no re-sort), remove
+compacts them, refresh rebuilds.
+
+Every result is verified exact Hamming distance, one row per (probe,
+matching id) at that id's smallest distance. With unique ids these are the
+rows banded_radius_search returns (its dropDuplicates keeps an arbitrary
+distance for an id with two signatures); tests pin both shapes against it
+and against brute force.
 """
 
 from __future__ import annotations
 
+import threading
+from typing import NamedTuple
+
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..config import bands_for_radius
-from ..functions.hashing import band_keys_np
-from ..operators.banded_join import explode_bands
+from ..functions.hashing import band_keys_np, popcount64_np
+
+_BATCH_SCHEMA = "q_id long, match_id long, distance int"
+# candidate rows verified per pass: passes that stay in cache are faster
+# (10^5 queries against 1M signatures: 2.2-2.4 s at 2^16, 4.4-4.6 s at 2^22)
+_CANDIDATES_PER_PASS = 1 << 16
+
+
+class _Snapshot(NamedTuple):
+    ids: np.ndarray
+    sigs: np.ndarray
+    keys: np.ndarray
+    rows: np.ndarray
+
+
+def _combined_keys(sigs: np.ndarray, n_bands: int) -> np.ndarray:
+    """(n,) signatures -> (n * n_bands,) combined keys, row-major: key
+    i * n_bands + b is band b of signature i."""
+    band_ids = np.arange(n_bands, dtype=np.int64) << 33
+    return (band_keys_np(sigs, n_bands) | band_ids).ravel()
+
+
+def _build(ids: np.ndarray, sigs: np.ndarray, n_bands: int) -> _Snapshot:
+    keys = _combined_keys(sigs, n_bands)
+    order = np.argsort(keys, kind="stable")
+    return _Snapshot(ids, sigs, keys[order], order // n_bands)
+
+
+def _inserted(snap: _Snapshot, ids: np.ndarray, sigs: np.ndarray, n_bands: int) -> _Snapshot:
+    add = _build(ids, sigs, n_bands)
+    at = np.searchsorted(snap.keys, add.keys, side="right")
+    return _Snapshot(
+        np.concatenate([snap.ids, ids]),
+        np.concatenate([snap.sigs, sigs]),
+        np.insert(snap.keys, at, add.keys),
+        np.insert(snap.rows, at, add.rows + len(snap.ids)),
+    )
+
+
+def _removed(snap: _Snapshot, ids: np.ndarray) -> _Snapshot:
+    keep = ~np.isin(snap.ids, ids)
+    new_row = np.cumsum(keep) - 1
+    kept_keys = keep[snap.rows]
+    return _Snapshot(
+        snap.ids[keep],
+        snap.sigs[keep],
+        snap.keys[kept_keys],
+        new_row[snap.rows[kept_keys]],
+    )
+
+
+def _matches(
+    snap: _Snapshot, q_sigs: np.ndarray, n_bands: int, radius: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(query index, match id, distance) for every (query, id) within
+    `radius`, one per pair at the id's smallest distance, sorted by query
+    index then match id."""
+    qkeys = _combined_keys(q_sigs, n_bands)
+    lo = np.searchsorted(snap.keys, qkeys, side="left")
+    cnt = np.searchsorted(snap.keys, qkeys, side="right") - lo
+    # verify a slice of queries per pass, so the candidate arrays of a
+    # batch stay near _CANDIDATES_PER_PASS rows
+    per_query = cnt.reshape(-1, n_bands).sum(axis=1)
+    cuts = (np.flatnonzero(np.diff(np.cumsum(per_query) // _CANDIDATES_PER_PASS)) + 1).tolist()
+    parts = [
+        _verify(snap, q_sigs, lo, cnt, a, b, n_bands, radius)
+        for a, b in zip([0, *cuts], [*cuts, len(q_sigs)])
+    ]
+    return tuple(np.concatenate(col) for col in zip(*parts))
+
+
+def _verify(
+    snap: _Snapshot,
+    q_sigs: np.ndarray,
+    lo: np.ndarray,
+    cnt: np.ndarray,
+    a: int,
+    b: int,
+    n_bands: int,
+    radius: int,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """_matches for queries a..b-1; the run of band key k starts at lo[k]
+    and holds cnt[k] rows."""
+    lo, cnt = lo[a * n_bands : b * n_bands], cnt[a * n_bands : b * n_bands]
+    # every position of every key's run, flattened
+    pos = np.repeat(lo - (np.cumsum(cnt) - cnt), cnt) + np.arange(cnt.sum())
+    q = a + np.repeat(np.arange(len(lo)) // n_bands, cnt)
+    rows = snap.rows[pos]
+    dist = popcount64_np(snap.sigs[rows] ^ q_sigs[q])
+    ok = dist <= radius
+    # one (query, id) pair can collide in several bands, and one id can hold
+    # several signatures
+    return _nearest(q[ok], snap.ids[rows[ok]], dist[ok])
+
+
+def _nearest(
+    q: np.ndarray, mid: np.ndarray, dist: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The smallest distance of each (q, mid) pair, sorted by (q, mid)."""
+    order = np.lexsort((dist, mid, q))
+    q, mid, dist = q[order], mid[order], dist[order]
+    first = np.ones(len(q), dtype=bool)
+    first[1:] = (q[1:] != q[:-1]) | (mid[1:] != mid[:-1])
+    return q[first], mid[first], dist[first]
 
 
 class ProbeSession:
@@ -46,7 +164,8 @@ class ProbeSession:
 
     Parameters mirror banded_radius_search: `radius` is the session's max
     supported radius (n_bands > radius gives pigeonhole-exact recall for
-    every probe radius <= it, per-probe override allowed downward).
+    every probe radius <= it, per-probe override allowed downward). Rows
+    with a null id or signature are not indexed.
     """
 
     def __init__(
@@ -56,7 +175,6 @@ class ProbeSession:
         id_col: str = "id",
         sig_col: str = "sig",
         n_bands: int | None = None,
-        n_partitions: int | None = None,
     ) -> None:
         self.radius = radius
         self.n_bands = n_bands or bands_for_radius(radius)
@@ -67,93 +185,58 @@ class ProbeSession:
             )
         self.spark: SparkSession = corpus.sparkSession
         self._id_col, self._sig_col = id_col, sig_col
-        self._n_partitions = n_partitions or int(
-            self.spark.conf.get("spark.sql.shuffle.partitions")
-        )
-        self._bands = self._build(
-            corpus.select(
-                F.col(id_col).alias("_id"), F.col(sig_col).alias("_sig")
-            )
-        )
+        self._lock = threading.Lock()  # serializes mutations; reads take none
+        self._snap: _Snapshot | None = _build(*self._collect(corpus), self.n_bands)
 
     # -- internals ---------------------------------------------------------
 
-    def _build(self, slim: DataFrame) -> DataFrame:
-        bands = (
-            explode_bands(
-                slim.filter(F.col("_sig").isNotNull()), "_id", "_sig", self.n_bands
-            )
-            # one combined probe key: band_key is a LOGICAL (zero-fill) slice
-            # of <= 32 bits, so band_id * 2^33 + band_key is collision-free
-            # and monotone in (band_id, band_key) — a probe is then a single
-            # long-column IN filter instead of an 8-way two-column OR
-            # (measured ~2x cheaper per probe at 1M sigs), and
-            # sortWithinPartitions on it gives cached batches tight min/max
-            # stats for InMemoryTableScan batch pruning
-            .withColumn(
-                "_bk",
-                F.col("band_id").cast("long") * F.lit(1 << 33) + F.col("band_key"),
-            )
-            .repartition(self._n_partitions, "band_id", "band_key")
-            .sortWithinPartitions("_bk")
-            .persist(StorageLevel.MEMORY_AND_DISK)
+    def _collect(
+        self, rows: DataFrame, id_col: str | None = None, sig_col: str | None = None
+    ) -> tuple[np.ndarray, np.ndarray]:
+        """(ids, sigs) int64 arrays of the rows whose id and sig are set."""
+        slim = rows.select(
+            F.col(id_col or self._id_col).cast("long").alias("id"),
+            F.col(sig_col or self._sig_col).cast("long").alias("sig"),
+        ).filter(F.col("id").isNotNull() & F.col("sig").isNotNull())
+        if rows.isLocal():
+            # rows held in the driver (a frame built from local data, like one
+            # download's files) collect without a Spark job: ~0.1 CPU-s for
+            # 1000 rows, against ~0.3 through the Arrow job of toPandas
+            ids, sigs = np.array(slim.collect(), dtype=np.int64).reshape(-1, 2).T
+            return np.ascontiguousarray(ids), np.ascontiguousarray(sigs)
+        pdf = slim.toPandas()
+        return (
+            pdf["id"].to_numpy(dtype=np.int64),
+            pdf["sig"].to_numpy(dtype=np.int64),
         )
-        bands.count()  # materialize NOW: probe latency must not pay the build
-        return bands
 
-    def _swap(self, slim: DataFrame) -> None:
-        old = self._bands
-        # Cut lineage BEFORE building: `slim` reads the outgoing snapshot, so
-        # without a checkpoint every mutation nests the previous snapshot's
-        # plan — O(mutations) Catalyst analysis cost per probe on a long-lived
-        # session, and a lost cache block would recompute through every prior
-        # snapshot. localCheckpoint materializes the slim (2-long-column) rows
-        # and roots the new band table at a LogicalRDD: constant plan depth
-        # per snapshot. The checkpoint blocks stay referenced by the new band
-        # table's lineage and are GC-freed with it (ContextCleaner).
-        slim = slim.localCheckpoint(eager=True)
-        self._bands = self._build(slim)
-        old.unpersist()
+    def _current(self) -> _Snapshot:
+        snap = self._snap
+        if snap is None:
+            raise RuntimeError("ProbeSession is closed")
+        return snap
 
-    def _slim(self) -> DataFrame:
-        """Current corpus rows (one per id) recovered from the band table."""
-        return self._bands.filter(F.col("band_id") == 0).select("_id", "_sig")
-
-    # -- queries -----------------------------------------------------------
-
-    def search(self, sig: int, radius: int | None = None) -> list[tuple[int, int]]:
-        """[(match_id, distance)] within `radius` of `sig`, sorted by
-        (distance, id). The single-probe RPC shape (single_phash_search):
-        band keys computed driver-side, one cached-scan filter job."""
+    def _radius(self, radius: int | None) -> int:
         r = self.radius if radius is None else radius
         if r > self.radius:
             raise ValueError(
                 f"probe radius {r} > session radius {self.radius} "
                 f"(recall guarantee needs n_bands > radius)"
             )
-        keys = band_keys_np(np.array([sig], dtype=np.int64), self.n_bands)[0]
-        bks = [
-            (band_id << 33) + int(key) for band_id, key in enumerate(keys.tolist())
-        ]
-        rows = (
-            self._bands.filter(F.col("_bk").isin(bks))
-            .withColumn(
-                "distance",
-                F.bit_count(F.col("_sig").bitwiseXOR(F.lit(int(sig)))),
-            )
-            .filter(F.col("distance") <= r)
-            .select("_id", "distance")
-            .collect()
+        return r
+
+    # -- queries -----------------------------------------------------------
+
+    def search(self, sig: int, radius: int | None = None) -> list[tuple[int, int]]:
+        """[(match_id, distance)] within `radius` of `sig`, sorted by
+        (distance, id): the single-probe RPC shape (single_phash_search).
+        Answered from the snapshot in the driver; no Spark job runs."""
+        r = self._radius(radius)
+        _, mid, dist = _matches(
+            self._current(), np.array([sig], dtype=np.int64), self.n_bands, r
         )
-        # one id can collide in several bands (same exact distance each
-        # time); dedup driver-side — a groupBy would add a whole shuffle
-        # stage to every probe for at most n_bands duplicate rows per match.
-        # Nearest-first (distance, then id), per the contract above: result[0]
-        # must be the closest match, not the lowest id.
-        return sorted(
-            {(r_["_id"], r_["distance"]) for r_ in rows},
-            key=lambda t: (t[1], t[0]),
-        )
+        order = np.lexsort((mid, dist))
+        return list(zip(mid[order].tolist(), dist[order].tolist()))
 
     def search_batch(
         self,
@@ -162,65 +245,54 @@ class ProbeSession:
         query_sig: str = "sig",
         radius: int | None = None,
     ) -> DataFrame:
-        """(q_id, match_id, distance): the batched probe shape, joined
-        against the RESIDENT band table (queries explode + broadcast; the
-        corpus side stays cached and pre-partitioned)."""
-        r = self.radius if radius is None else radius
-        if r > self.radius:
-            raise ValueError(
-                f"probe radius {r} > session radius {self.radius}"
-            )
-        qb = explode_bands(
-            queries.filter(F.col(query_sig).isNotNull()),
-            query_id,
-            query_sig,
-            self.n_bands,
-        ).select(
-            "band_id",
-            "band_key",
-            F.col("_id").alias("q_id"),
-            F.col("_sig").alias("q_sig"),
+        """(q_id long, match_id long, distance int): the batched probe shape
+        (one download's files). The query frame is collected and answered
+        from the snapshot in the driver, like `search`; corpus-scale query
+        sets belong to banded_radius_search."""
+        r = self._radius(radius)
+        snap = self._current()
+        q_ids, q_sigs = self._collect(queries, query_id, query_sig)
+        q, mid, dist = _matches(snap, q_sigs, self.n_bands, r)
+        # queries that share an id answer as one, like the join's dedup
+        q_id, mid, dist = _nearest(q_ids[q], mid, dist)
+        out = pd.DataFrame(
+            {"q_id": q_id, "match_id": mid, "distance": dist.astype(np.int32)}
         )
-        return (
-            self._bands.join(F.broadcast(qb), ["band_id", "band_key"])
-            .withColumn(
-                "distance",
-                F.bit_count(F.col("q_sig").bitwiseXOR(F.col("_sig"))),
-            )
-            .filter(F.col("distance") <= r)
-            .select("q_id", F.col("_id").alias("match_id"), "distance")
-            .dropDuplicates(["q_id", "match_id"])
-        )
+        if out.empty:
+            # PySpark turns an empty local frame into a Python RDD, and its
+            # collect starts Python workers (~1 CPU-s on 4 cores); one row
+            # limited to none stays an empty local relation in the driver
+            return self.spark.createDataFrame(
+                out.reindex([0], fill_value=0), _BATCH_SCHEMA
+            ).limit(0)
+        return self.spark.createDataFrame(out, _BATCH_SCHEMA)
 
     # -- mutation (immutable-snapshot semantics) ----------------------------
 
     def insert(self, rows: DataFrame) -> None:
-        """Add (id, sig) rows and swap in a fresh snapshot (J8 analog; the
-        reference's locked per-item tree insert becomes a whole-snapshot
-        rebuild — the honest Spark-native trade, same as catalog MERGE)."""
-        add = rows.select(
-            F.col(self._id_col).alias("_id"), F.col(self._sig_col).alias("_sig")
-        )
-        self._swap(self._slim().unionByName(add))
+        """Add (id, sig) rows and swap in a new snapshot (J8 analog; the
+        reference's locked per-item tree insert becomes a merge of the new
+        rows' sorted keys into a copy of the old arrays)."""
+        ids, sigs = self._collect(rows)
+        with self._lock:
+            self._snap = _inserted(self._current(), ids, sigs, self.n_bands)
 
     def remove(self, ids: list[int]) -> None:
-        """Drop ids from the index (J9 analog)."""
-        self._swap(
-            self._slim().filter(~F.col("_id").isin([int(i) for i in ids]))
-        )
+        """Drop every row of the given ids from the index (J9 analog)."""
+        drop = np.asarray([int(i) for i in ids], dtype=np.int64)
+        with self._lock:
+            self._snap = _removed(self._current(), drop)
 
     def refresh(self, corpus: DataFrame) -> None:
         """Full reload from a new corpus snapshot (the server's periodic
-        tree reload, /root/reference/server/server.py:136-144)."""
-        self._swap(
-            corpus.select(
-                F.col(self._id_col).alias("_id"),
-                F.col(self._sig_col).alias("_sig"),
-            )
-        )
+        tree reload, server/server.py:136-144 of the reference)."""
+        snap = _build(*self._collect(corpus), self.n_bands)
+        with self._lock:
+            self._snap = snap
 
     def size(self) -> int:
-        return self._bands.count() // self.n_bands
+        return len(self._current().ids)
 
     def close(self) -> None:
-        self._bands.unpersist()
+        """Release the snapshot; later calls raise RuntimeError."""
+        self._snap = None

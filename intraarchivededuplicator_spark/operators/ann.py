@@ -22,7 +22,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import LongType
 from pyspark.sql.window import Window
-from pyspark.storagelevel import StorageLevel
 
 from .banded_join import banded_self_join
 
@@ -162,10 +161,10 @@ def ann_topk(
         # outright (the oracle's ev CTE carries the same len = dim gate)
     ).filter(F.col("_vec").isNotNull() & (F.size("_vec") == dim))
     # cand feeds THREE subtrees (both directions + the two vector
-    # prefilters); without a persist the band join + Hamming verify re-run
+    # prefilters); without a checkpoint the band join + Hamming verify re-run
     # per consumer — exchange reuse dedupes the shuffle but not the join.
-    # The pair set is id-only and hot_threshold-capped, so MEMORY_AND_DISK
-    # is small and spill-safe at scale.
+    # The pair set is id-only and hot_threshold-capped, so the checkpoint
+    # is small at scale.
     cand = banded_self_join(
         sigged,
         "_aid",
@@ -174,7 +173,7 @@ def ann_topk(
         n_bands=n_bands,
         hot_threshold=hot_threshold,
         require_full_recall=False,
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).localCheckpoint()
     both = cand.select(
         F.col("id_lo").alias("qid"), F.col("id_hi").alias("nid")
     ).unionByName(
@@ -234,7 +233,7 @@ def ann_near_pairs(
         sig_udf(F.col(vec_col).cast("array<double>")).alias("_sig"),
         # eligibility contract: EXACTLY dim elements (see ann_topk)
     ).filter(F.col("_vec").isNotNull() & (F.size("_vec") == dim))
-    # three consumers, same rationale as ann_topk's persist
+    # three consumers, same rationale as ann_topk's checkpoint
     cand = banded_self_join(
         sigged,
         "_aid",
@@ -243,7 +242,7 @@ def ann_near_pairs(
         n_bands=n_bands,
         hot_threshold=hot_threshold,
         require_full_recall=False,
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).localCheckpoint()
     a = _prefilter_vecs(
         sigged.select(F.col("_aid").alias("id_lo"), F.col("_vec").alias("_va")), cand, "id_lo"
     )

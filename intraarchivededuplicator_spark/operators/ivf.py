@@ -48,7 +48,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
-from pyspark.storagelevel import StorageLevel
 
 from .ann import rcos6, scaled_vec
 
@@ -169,15 +168,15 @@ def _ivf_candidates(
     quantizer: str = "sampled",
     kmeans_iter: int = 3,
 ) -> tuple[DataFrame, DataFrame]:
-    """(vecs, cand): the persisted scaled-vector table ("_id", "_v") and the
+    """(vecs, cand): the checkpointed scaled-vector table ("_id", "_v") and the
     directed probe candidates (qid, nid) — the shared front half of both IVF
     query shapes. quantizer: "sampled" (md5 sample; the oracle-gated
     default) or "kmeans" (Lloyd-refined, see kmeans_centroids)."""
     spark: SparkSession = emb.sparkSession
-    vecs = _scaled_vecs(emb, id_col, vec_col).persist(StorageLevel.MEMORY_AND_DISK)
+    vecs = _scaled_vecs(emb, id_col, vec_col).localCheckpoint()
 
-    # quantizer build doubles as the persist-materializing action, so the
-    # main job reads vectors from cache instead of re-scanning the source
+    # the quantizer build and the main job both read the checkpointed
+    # vectors instead of re-scanning the source
     if quantizer == "kmeans":
         rows = kmeans_centroids(vecs, n_cells, kmeans_iter)
     elif quantizer == "sampled":
@@ -196,7 +195,7 @@ def _ivf_candidates(
     )
     ranked_cells = assign.select(
         "_id", "cell_id", F.row_number().over(w_cell).alias("_r")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).localCheckpoint()
 
     members = ranked_cells.filter(F.col("_r") == 1).select(
         F.col("cell_id"), F.col("_id").alias("nid")

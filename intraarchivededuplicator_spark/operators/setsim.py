@@ -39,7 +39,6 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import ArrayType, StringType
-from pyspark.storagelevel import StorageLevel
 
 # Adaptive-strategy gates (jaccard_self_join(strategy="auto")). The dense
 # branch engages only when BOTH hold, so its broadcast side is bounded by
@@ -66,7 +65,7 @@ def jaccard_self_join(
     Exact: verified against the naive all-pairs oracle in tests.
 
     Two physical strategies, picked at runtime (AQE-style: one cheap
-    statistics job over the persisted slim projection decides the plan):
+    statistics job over the checkpointed slim projection decides the plan):
 
     * ``prefix`` — AllPairs/PPJoin prefix filtering (below). The scale path:
       candidate volume tracks true-pair density, never the gram skew.
@@ -85,11 +84,12 @@ def jaccard_self_join(
       broadcast of the <= ``dense_docs_max``-row bitmap table. Above either
       gate, auto falls back to prefix.
 
-    The hashed (id, grams) projection is persisted MEMORY_AND_DISK: both
+    The hashed (id, grams) projection is locally checkpointed: both
     branches read it 2-3 times (probe/dict/bitmaps, or explode + the two
     verify sides), and re-deriving grams from text costs a full corpus scan
     per read. The projection is O(total grams * 8B) — the same order as one
-    exchange of the exploded table, disk-backed at scale.
+    exchange of the exploded table, disk-backed at scale, and its blocks
+    are freed with the result instead of staying in the session's cache.
     """
     if strategy not in ("auto", "prefix", "dense"):
         raise ValueError(f"unknown strategy {strategy!r}")
@@ -100,11 +100,10 @@ def jaccard_self_join(
         g = F.array_distinct(F.transform(g, lambda x: F.xxhash64(x)))
     d = docs.select(F.col(id_col).alias("_id"), g.alias("_g")).filter(
         F.size("_g") > 0
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).localCheckpoint()
     if strategy == "dense":
         dense = _dense_join(d, threshold, dense_universe_max)
         if dense is None:
-            d.unpersist()
             raise ValueError(
                 f"strategy='dense' needs a gram universe of at most "
                 f"dense_universe_max={dense_universe_max} distinct grams"
@@ -215,7 +214,7 @@ def _dense_join(
 
 
 def _prefix_join(d: DataFrame, threshold: float) -> DataFrame:
-    """AllPairs/PPJoin prefix filtering over the persisted (_id, _g) frame."""
+    """AllPairs/PPJoin prefix filtering over the checkpointed (_id, _g) frame."""
     # repartition on gram ONCE: the df groupBy and the rank join's left side
     # both read this exchange via ReuseExchange (same fusion as the band legs)
     exploded = d.select(

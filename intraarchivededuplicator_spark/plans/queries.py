@@ -17,7 +17,6 @@ from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
-from pyspark.storagelevel import StorageLevel
 
 from ..config import DedupConfig
 from ..functions.columns import (
@@ -135,31 +134,16 @@ def q_simhash_radius_search(spark, sf_dir):
 def q_probe_session_search(spark, sf_dir):
     """The resident-index service surface (engine/probe.ProbeSession, C4)
     under the driver hash gate: same probe set and semantics as
-    q_simhash_radius_search, answered through the persisted band table's
+    q_simhash_radius_search, answered through the driver-resident snapshot's
     batched shape instead of the per-call join operator — the two must be
     row-identical (also pinned differentially in tests/test_probe_session),
     so the radius-search oracle applies verbatim."""
     from ..engine.probe import ProbeSession
 
     d = docs_with_sig(spark, sf_dir)
-    sess = ProbeSession(
-        d, SEARCH_RADIUS, id_col="doc_id", sig_col="simhash"
-    )
+    sess = ProbeSession(d, SEARCH_RADIUS, id_col="doc_id", sig_col="simhash")
     probes = d.filter(F.col("doc_id") % 100 == 0).select("doc_id", "simhash")
-    out = sess.search_batch(
-        probes, query_id="doc_id", query_sig="simhash"
-    ).select(
-        F.col("q_id").cast("long").alias("q_id"),
-        F.col("match_id").cast("long").alias("match_id"),
-        F.col("distance").cast("int").alias("distance"),
-    )
-    # Materialize the (small) probe result NOW so the session's corpus-sized
-    # band-table cache can be released before this function returns — the
-    # driver gate shares one Spark session across all queries, and a leaked
-    # MEMORY_AND_DISK band table would press on every later cache user.
-    out = out.localCheckpoint(eager=True)
-    sess.close()
-    return out
+    return sess.search_batch(probes, query_id="doc_id", query_sig="simhash")
 
 
 def q_simhash_clusters(spark, sf_dir):
@@ -435,7 +419,7 @@ def q_minhash_jaccard_estimate(spark, sf_dir):
             mh(F.col("text")).alias("minhash"),
             shu(F.col("text")).alias("shset"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint()
     )
     cand = minhash_candidate_pairs(
         d, "doc_id", "minhash", n_bands=4, rows_per_band=4
@@ -508,7 +492,7 @@ def q_minhash_recall_audit(spark, sf_dir):
             mh(F.col("text")).alias("minhash"),
             shu(F.col("text")).alias("shset"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint()
     )
     exact = jaccard_self_join(
         d.filter(F.col("shset").isNotNull()).select("doc_id", "shset"),
@@ -600,21 +584,20 @@ def q_ngram_jaccard_pairs(spark, sf_dir):
 # --- containment (J12) -------------------------------------------------------
 
 def q_containment_pairs(spark, sf_dir):
-    # precompute + persist the shingle projection: the operator reads the
-    # docs frame twice (shingle explode, verify-text join), and re-running
-    # the shingle kernel per branch costs a full corpus scan each time. The
-    # persisted frame is the same slim projection the flagship's signature
-    # pass shares (engine/pipeline computes it once for all legs);
-    # MEMORY_AND_DISK keeps it spill-safe at scale. Lifecycle: driver-gate
-    # queries are single-action (evaluate once, session ends or LRU evicts);
-    # a long-lived caller embedding this should unpersist after consuming.
+    # precompute + locally checkpoint the shingle projection: the operator
+    # reads the docs frame twice (shingle explode, verify-text join), and
+    # re-running the shingle kernel per branch costs a full corpus scan each
+    # time. The checkpointed frame is the same slim projection the flagship's
+    # signature pass shares (engine/pipeline computes it once for all legs).
+    # Its blocks are freed by the ContextCleaner once the result is dropped;
+    # a persist() would stay in the session's cache manager.
     from ..functions.udfs import make_shingle_hashes_udf
 
     d = load(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("id"),
         "text",
         make_shingle_hashes_udf(K_SHINGLE)(F.col("text")).alias("_sh"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).localCheckpoint()
     return containment_pairs(
         d, "id", "text", K_SHINGLE, shingle_col="_sh"
     ).select("inner_id", "outer_id")
@@ -642,7 +625,7 @@ def q_containment_pairs_winnowed(spark, sf_dir):
             F.col("_wsig.win_interior").alias("_wint"),
             F.col("_wsig.win_boundary").alias("_wbnd"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint()
     )
     return containment_pairs(
         d,
@@ -1311,9 +1294,9 @@ def q_domain_pagerank(spark, sf_dir):
     here is keyed by domain, orders of magnitude below doc granularity.
     Per iteration: one shuffle join ranks x edges on src (deg folded into
     the edge table once, up front) + one partial-aggregated exchange on
-    dst. The edge table is persisted across iterations; localCheckpoint
-    after each round would cap plan depth on longer runs (the CC-loop
-    discipline) but 3 fixed rounds stay shallow."""
+    dst. The edge table is locally checkpointed once for all iterations;
+    a checkpoint after each round would cap plan depth on longer runs (the
+    CC-loop discipline) but 3 fixed rounds stay shallow."""
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     pages = _planted_link_html(d)
     edges = (
@@ -1330,12 +1313,12 @@ def q_domain_pagerank(spark, sf_dir):
         .distinct()
     )
     deg = edges.groupBy("src_domain").agg(F.count("*").alias("outdeg"))
-    e = edges.join(deg, "src_domain").persist(StorageLevel.MEMORY_AND_DISK)
+    e = edges.join(deg, "src_domain").localCheckpoint()
     nodes = (
         pages.select(F.col("src_domain").alias("domain"))
         .union(edges.select(F.col("dst_domain").alias("domain")))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint()
     )
     n_nodes = nodes.count()  # driver scalar: domain count, bounded
     base = F.expr(f"CAST({PR_SCALE} * 15 DIV (100 * {n_nodes}) AS LONG)")
@@ -1470,12 +1453,12 @@ def q_dup_span_stats(spark, sf_dir):
     from ..functions.shingle_kernel import positional_shingles
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    # persisted: three consumers (df agg, occurrences re-join, n_positions)
+    # checkpointed: three consumers (df agg, occurrences re-join, n_positions)
     # share one kernel pass — the q_containment_pairs discipline
     occ = (
         positional_shingles(d, K_SHINGLE)
         .select("doc_id", "pos", F.unhex(F.md5("s")).alias("g"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint()
     )
     dfg = occ.groupBy("g").agg(F.countDistinct("doc_id").alias("df_docs"))
     dup = occ.join(dfg.filter(F.col("df_docs") >= 2), "g").select(
@@ -1542,13 +1525,13 @@ def q_dup_span_removal(spark, sf_dir):
     from ..functions.shingle_kernel import positional_shingles, positional_tokens
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    # persist the slim kernel projection: three consumers (df/owner agg,
+    # checkpoint the slim kernel projection: three consumers (df/owner agg,
     # occurrences re-join, nothing else re-runs the Python kernel) — the
     # q_containment_pairs discipline
     occ = (
         positional_shingles(d, K_SHINGLE)
         .select("doc_id", "pos", F.unhex(F.md5("s")).alias("g"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint()
     )
     gstat = occ.groupBy("g").agg(
         F.countDistinct("doc_id").alias("df_docs"),
@@ -1577,7 +1560,7 @@ def q_dup_span_removal(spark, sf_dir):
     # the token stream being cut MUST come from the same tokenizer as the
     # gram positions (see positional_tokens: a JVM split has a different
     # whitespace class, and a one-token skew cuts the wrong span)
-    toks = positional_tokens(d).persist(StorageLevel.MEMORY_AND_DISK)
+    toks = positional_tokens(d).localCheckpoint()
     kept = toks.join(remtok, ["doc_id", "tpos"], "left_anti")
     ka = kept.groupBy("doc_id").agg(
         F.count("*").alias("n_kept"),
@@ -2045,12 +2028,12 @@ def q_lsh_recall_audit(spark, sf_dir):
 def _recall_audit(exact: DataFrame, ann: DataFrame) -> DataFrame:
     """Shared ANN-audit arithmetic: per-vector intersection of two
     deterministic k-sets with counts and rounded recall (one definition so
-    the IVF and LSH audit surfaces cannot drift). Both inputs are
-    persisted: each feeds its own count AND the intersection join, and the
-    exact leg's lineage is the O(n^2) brute-force plan — without the
-    persist it would be evaluated twice."""
-    exact = exact.persist(StorageLevel.MEMORY_AND_DISK)
-    ann = ann.persist(StorageLevel.MEMORY_AND_DISK)
+    the IVF and LSH audit surfaces cannot drift). Both inputs are locally
+    checkpointed: each feeds its own count AND the intersection join, and
+    the exact leg's lineage is the O(n^2) brute-force plan — without the
+    checkpoint it would be evaluated twice."""
+    exact = exact.localCheckpoint()
+    ann = ann.localCheckpoint()
     ecnt = exact.groupBy("vec_id").agg(F.count("*").alias("n_exact"))
     acnt = ann.groupBy("vec_id").agg(F.count("*").alias("n_ann"))
     mcnt = (
@@ -3613,7 +3596,7 @@ def q_simhash_pair_precision(spark, sf_dir):
     shu = make_shingle_hashes_udf(K_SHINGLE)
     d = docs_with_sig(spark, sf_dir).select(
         "doc_id", "simhash", shu(F.col("text")).alias("shset")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).localCheckpoint()
     pairs = banded_self_join(
         d, "doc_id", "simhash", SIMHASH_RADIUS, blacklist=(0,)
     ).select("id_lo", "id_hi", "distance")

@@ -185,6 +185,26 @@ def test_failed_roundtrip_leaves_no_scratch_dir(
     assert list(scratch.glob(ROUNDTRIPS[name] + "*")) == []
 
 
+# queries that read one intermediate table from several legs
+REUSED_TABLES = (
+    "minhash_jaccard_estimate", "minhash_recall_audit", "containment_pairs",
+    "containment_pairs_winnowed", "domain_pagerank", "dup_span_stats",
+    "dup_span_removal", "ann_recall_audit", "lsh_recall_audit",
+    "simhash_pair_precision",
+)
+
+
+@pytest.mark.parametrize("name", REUSED_TABLES)
+def test_reused_tables_leave_the_cache_empty(spark, sf_dir, name):
+    """Each of these queries shares a table between legs; a persist() of it
+    stayed in the cache manager for the whole session."""
+    spark.catalog.clearCache()  # drop what earlier tests cached
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.isEmpty()
+    getattr(q, "q_" + name)(spark, str(sf_dir)).collect()
+    assert cache.isEmpty()
+
+
 def test_shared_legs_leave_the_cache_empty(spark, sf_dir):
     """dsir_weights and the signal-leg queries reuse one intermediate table;
     a persist() of it stayed in the cache manager for the whole session."""
