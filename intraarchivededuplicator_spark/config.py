@@ -1,8 +1,9 @@
 """Engine configuration.
 
 Defaults mirror the reference's production tuning and the golden fixture
-config from FIXTURES.md §4: {k_shingle=5, minhash_k=128, simhash bands 8x8
-bits, radius=4}.
+config from FIXTURES.md §4: k_shingle=5, minhash_k=128, radius=4. SimHash
+uses 5 bands of 13/13/13/13/12 bits, not the fixture's 8x8-bit layout (see
+bands_for_radius).
 
 - radius defaults: dedup 2 / cross-similarity 4 / interactive 6
   (/root/reference/deduplicator/ProcessArchive.py:19, :746, :863)
@@ -13,7 +14,7 @@ bits, radius=4}.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from .functions.hashing import BAD_SIMHASHES, MinHashParams
 
@@ -39,18 +40,6 @@ class DedupConfig:
     minhash_bands: int = 32  # 32 bands x 4 rows over the 128-sig
     simhash_radius: int = 4
     simhash_bands: int = 5  # 13/13/13/13/12-bit bands: full recall for r <= 4
-    seed: int = 42
-    # collapse exact-duplicate texts to one representative BEFORE the fuzzy
-    # legs: star edges link members (O(m) not O(m^2) for an m-member exact
-    # group) and SimHash/MinHash/containment run on distinct texts only. At
-    # web scale 30-50% of pages are byte-exact dups, so this halves fuzzy
-    # work AND bounds mega-group pair emission. False restores the flat
-    # all-pairs table (strict reference pair-table parity).
-    exact_first: bool = True
-    # P6 junk gate: blank docs + infrastructure paths + short error-page
-    # boilerplate excluded from the pair legs (functions/junk.py); False
-    # reduces the gate to blank-doc-only
-    junk_filter: bool = True
     # skew handling (reference analogs cited in module docstring)
     hot_band_threshold: int = 500
     hot_band_salt: int = 16
@@ -67,7 +56,11 @@ class DedupConfig:
     # should set 8.
     containment_winnow_w: int | None = None
     blacklist: tuple[int, ...] = BAD_SIMHASHES
-    minhash_params: MinHashParams = field(default_factory=MinHashParams.make)
+
+    @property
+    def minhash_params(self) -> MinHashParams:
+        """The minhash_k-wide permutation family (default seed 42)."""
+        return MinHashParams.make(self.minhash_k)
 
     def __post_init__(self):
         if self.simhash_bands <= self.simhash_radius:

@@ -54,6 +54,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import bands_for_radius
 from ..functions.hashing import band_keys_np, popcount64_np
+from ..session import empty_frame
 
 _BATCH_SCHEMA = "q_id long, match_id long, distance int"
 # candidate rows verified per pass: passes that stay in cache are faster
@@ -259,12 +260,7 @@ class ProbeSession:
             {"q_id": q_id, "match_id": mid, "distance": dist.astype(np.int32)}
         )
         if out.empty:
-            # PySpark turns an empty local frame into a Python RDD, and its
-            # collect starts Python workers (~1 CPU-s on 4 cores); one row
-            # limited to none stays an empty local relation in the driver
-            return self.spark.createDataFrame(
-                out.reindex([0], fill_value=0), _BATCH_SCHEMA
-            ).limit(0)
+            return empty_frame(self.spark, _BATCH_SCHEMA)
         return self.spark.createDataFrame(out, _BATCH_SCHEMA)
 
     # -- mutation (immutable-snapshot semantics) ----------------------------

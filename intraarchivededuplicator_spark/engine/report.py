@@ -125,21 +125,24 @@ def best_matching_site(
 def expand_pairs_to_members(pairs: DataFrame, docs: DataFrame) -> DataFrame:
     """Re-expand representative-level pairs to member-level pairs.
 
-    Under cfg.exact_first the fuzzy pair legs link each exact-duplicate
-    group's REPRESENTATIVE only (plus star edges inside the group), which
-    preserves cluster connectivity but makes doc-level match counts
+    The pipeline's fuzzy pair legs link each exact-duplicate group's
+    REPRESENTATIVE only (plus star edges inside the group), which preserves
+    cluster connectivity but makes doc-level match counts
     representative-level (ADVICE r1). This inverse mapping restores the
     reference's ProcessArchive semantics for report aggregation: a pair
     (rep_a, rep_b) becomes members(a) x members(b), and an exact star
     becomes the group clique.
 
-    Cost is the m*n blowup exact_first avoided — by design: run it on the
-    (usually much smaller) pairs table feeding a report, not on the cluster
-    path. Requires docs to carry rep_id (compute_docs(rep_gate=True));
-    passes pairs through unchanged otherwise.
+    Cost is the m*n blowup the representative collapse avoided — by design:
+    run it on the (usually much smaller) pairs table feeding a report, not on
+    the cluster path. Requires docs to carry rep_id
+    (compute_docs(rep_gate=True)).
     """
     if "rep_id" not in docs.columns:
-        return pairs
+        raise ValueError(
+            "expand_pairs_to_members needs docs from "
+            "compute_docs(..., rep_gate=True)"
+        )
     members = docs.select(
         F.col("rep_id").alias("_r"), F.col("id").alias("_m")
     )

@@ -390,7 +390,8 @@ def signatures_batch(
     # DuckDB oracle recomputes it), so this is bit-identical to hashing each
     # token in a loop — it just drops the per-token Python dict work and
     # bounds md5 calls at the batch's distinct-token count (Zipfian web text:
-    # ~2-6% of the token stream; measured in tools/token_dup_stats.py).
+    # ~2-6% of the token stream; md5 calls per token at sf0.1 are recorded
+    # in BENCH/ROUND5.md).
     tok_lists = [tokenize(t) if isinstance(t, str) else [] for t in texts]
     lens = np.fromiter((len(t) for t in tok_lists), dtype=np.int64,
                        count=len(tok_lists))
@@ -447,28 +448,3 @@ def signatures_batch(
     if winnow_w is not None:
         return out_sim, out_mh, out_sh, out_wint, out_wbnd
     return out_sim, out_mh, out_sh
-
-
-def shingle_hash_set(
-    text, k_shingle: int, memo: dict[str, int] | None = None
-) -> np.ndarray | None:
-    """Sorted distinct shingle_hash32 values of a text; None if no shingles.
-
-    Shared kernel for the MinHash + shingle-set signature pass (both consume
-    exactly this set; computing it once halves the tokenize/md5 work).
-    """
-    toks = tokenize(text) if isinstance(text, str) else []
-    sh = shingles(toks, k_shingle)
-    if not sh:
-        return None
-    if memo is None:
-        vals = {shingle_hash32(s) for s in sh}
-    else:
-        vals = set()
-        for s in sh:
-            h = memo.get(s)
-            if h is None:
-                h = shingle_hash32(s)
-                memo[s] = h
-            vals.add(h)
-    return np.array(sorted(vals), dtype=np.int64)

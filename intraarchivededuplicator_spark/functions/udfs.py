@@ -12,13 +12,12 @@ import hashlib
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType, StringType
+from pyspark.sql.types import ArrayType, LongType
 
 from .hashing import (
     MINHASH_PRIME,
     MinHashParams,
     shingle_hash32,
-    shingle_hash_set,
     shingles,
     simhash64_batch,
     tokenize,
@@ -38,12 +37,6 @@ def make_simhash_udf(shingle_k: int):
         return pd.Series(simhash64_batch(texts.tolist(), shingle_k))
 
     return _udf
-
-
-@F.pandas_udf(StringType())
-def md5_hex_udf(texts: pd.Series) -> pd.Series:
-    """Python-side md5 (matches F.md5(encode(.,'UTF-8')); kept for parity tests)."""
-    return texts.map(lambda t: hashlib.md5((t or "").encode("utf-8")).hexdigest())
 
 
 def make_minhash_udf(k_shingle: int, params: MinHashParams):
@@ -156,43 +149,6 @@ def make_fast_signatures_udf(
         )
 
     return fast_sig_udf
-
-
-def make_minhash_shingles_udf(k_shingle: int, params: MinHashParams):
-    """text -> struct(minhash array<long>, shingle_hashes array<long>).
-
-    Fused signature pass: MinHash and the distinct-shingle-hash set both
-    derive from the same tokenize -> k-shingle -> md5-32 work, so computing
-    them in one Arrow batch halves that work versus separate UDFs. Output
-    fields match make_minhash_udf / make_shingle_hashes_udf exactly.
-    """
-    from pyspark.sql.types import StructField, StructType
-
-    a = np.array(params.a, dtype=np.int64)[:, None]
-    b = np.array(params.b, dtype=np.int64)[:, None]
-    schema = StructType(
-        [
-            StructField("minhash", ArrayType(LongType())),
-            StructField("shingle_hashes", ArrayType(LongType())),
-        ]
-    )
-
-    @F.pandas_udf(schema)
-    def sig_udf(texts: pd.Series) -> pd.DataFrame:
-        mh_out, sh_out = [], []
-        memo: dict[str, int] = {}
-        for text in texts:
-            hs = shingle_hash_set(text, k_shingle, memo)
-            if hs is None:
-                mh_out.append(None)
-                sh_out.append(None)
-                continue
-            vals = (a * hs[None, :] + b) % MINHASH_PRIME
-            mh_out.append(vals.min(axis=1).tolist())
-            sh_out.append(hs.tolist())
-        return pd.DataFrame({"minhash": mh_out, "shingle_hashes": sh_out})
-
-    return sig_udf
 
 
 def make_winnow_shingles_udf(k_shingle: int, winnow_w: int):

@@ -28,6 +28,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import empty_frame
+
 
 def _symmetric(e: DataFrame) -> DataFrame:
     return e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
@@ -162,7 +164,7 @@ def connected_components(
         e = e.localCheckpoint()
     prev = _checksum(e)
     if prev[0] == 0:
-        return spark.createDataFrame([], "id long, cluster_id long")
+        return empty_frame(spark, "id long, cluster_id long")
     if small_graph_cap and prev[0] <= small_graph_cap:
         return _driver_union_find(spark, e)
 

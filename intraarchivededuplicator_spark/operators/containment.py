@@ -27,7 +27,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.columns import token_shingles, tokens
-from ..functions.hashing import MINHASH_PRIME  # noqa: F401  (doc cross-ref)
 
 
 def _shingle_hashes32(text_col: str, k: int) -> F.Column:
@@ -51,7 +50,6 @@ def containment_pairs(
     id_col: str = "id",
     text_col: str = "text",
     k_shingle: int = 5,
-    use_suffix_array: bool = True,
     shingle_col: str | None = None,
     hot_anchor_cap: int | None = 250_000,
     broadcast_anchors: bool = True,
@@ -325,11 +323,6 @@ def containment_pairs(
     cand = cand.join(texts_in, "inner_id").join(texts_out, "outer_id").select(
         "outer_id", "outer_text", "inner_id", "inner_text"
     )
-
-    if not use_suffix_array:
-        return cand.filter(
-            F.contains(F.col("outer_text"), F.col("inner_text"))
-        ).select("inner_id", "outer_id")
 
     def verify(pdf: pd.DataFrame) -> pd.DataFrame:
         from ..functions.suffix import sa_contains, suffix_array

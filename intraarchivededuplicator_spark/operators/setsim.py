@@ -40,6 +40,8 @@ from functools import reduce
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import ArrayType, StringType
 
+from ..session import empty_frame
+
 # Adaptive-strategy gates (jaccard_self_join(strategy="auto")). The dense
 # branch engages only when BOTH hold, so its broadcast side is bounded by
 # construction (<= DENSE_DOCS_MAX rows x (DENSE_UNIVERSE_MAX/64 + 2) longs,
@@ -145,8 +147,8 @@ def _dense_join(
     spark = d.sparkSession
     if u == 0:
         id_t = d.schema["_id"].dataType.simpleString()
-        return spark.createDataFrame(
-            [], f"id_lo {id_t}, id_hi {id_t}, n_shared long, jaccard double"
+        return empty_frame(
+            spark, f"id_lo {id_t}, id_hi {id_t}, n_shared long, jaccard double"
         )
     n_words = (u + 63) // 64
     # dictionary: gram hash -> dense bit index. u <= universe_max, so the

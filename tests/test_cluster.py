@@ -100,6 +100,16 @@ def test_empty_edges(spark):
     assert got == {1: 1, 2: 2}
 
 
+def test_edge_free_graph_is_a_local_empty_frame(spark):
+    """An edge-free result must not be a Python RDD: each action on one
+    starts Python workers."""
+    e = spark.createDataFrame([(1, 1)], "id_lo long, id_hi long")
+    cc = connected_components(e)
+    plan = cc._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    assert cc.collect() == []
+
+
 def test_embedding_dup_clusters_composition(spark):
     """Pin the SemDeDup composition (plans/queries.q_embedding_dup_clusters):
     clusters of the IVF near-pair edge set == an independent driver-side

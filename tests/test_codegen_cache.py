@@ -22,7 +22,6 @@ def _pass(spark, pages) -> int:
     out = dedup_pipeline(spark, pages)
     out["clusters"].count()
     out["pairs"].count()
-    out["hot_bands"].unpersist()
     return janino_compiles(spark) - before
 
 

@@ -57,7 +57,7 @@ def test_extraction_invariant(spark, corpus, result):
 def test_recall_vs_bruteforce_oracle(spark, result):
     """BASELINE target: dup-pair recall >= 0.99 vs the O(n^2) oracle at the
     same signature config, measured the way the north rule states it — both
-    ends of every true in-radius pair share a cluster_id. (With exact_first
+    ends of every true in-radius pair share a cluster_id. (With exact-first
     canonicalization the pairs table stores star edges + rep-level fuzzy
     pairs, so pair-set equality is not the contract; connectivity is.) The
     banded join is exact by pigeonhole, so this must be 1.0."""
@@ -99,7 +99,7 @@ def test_near_dups_clustered(spark, corpus, result):
     _, truth, _ = corpus
     docs = result["docs"]
     cl = {r["url"]: r["cluster_id"] for r in result["clusters"].collect()}
-    # under exact_first, signatures live on each text_hash group's
+    # under exact-first, signatures live on each text_hash group's
     # representative row; members resolve via rep_id
     rows = docs.select("id", "url", "rep_id", "simhash").collect()
     by_id = {r["id"]: r["simhash"] for r in rows}

@@ -125,7 +125,7 @@ def test_uniqueness_predicates(spark, frames):
 
 
 def test_expand_pairs_to_members(spark):
-    """exact_first emits rep-level fuzzy pairs + star edges; expansion must
+    """The pipeline emits rep-level fuzzy pairs + star edges; expansion must
     restore member-level semantics (ADVICE r1): group cliques for exact,
     members(a) x members(b) for fuzzy pairs between reps."""
     from intraarchivededuplicator_spark.engine.report import (
@@ -162,6 +162,6 @@ def test_expand_pairs_to_members(spark):
         assert got[e] == "jaccard"
     assert len(got) == 9
 
-    # docs without rep_id: passthrough
-    plain = docs.select("id")
-    assert expand_pairs_to_members(pairs, plain) is pairs
+    # docs without rep_id are not pipeline docs
+    with pytest.raises(ValueError, match="rep_gate=True"):
+        expand_pairs_to_members(pairs, docs.select("id"))

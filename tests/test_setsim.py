@@ -123,6 +123,19 @@ def test_auto_picks_prefix_on_large_universe(spark):
     assert out.count() >= 40
 
 
+def test_empty_universe_is_a_local_empty_frame(spark):
+    """No doc has a gram: the dense branch returns an empty frame that must
+    not be a Python RDD (each action on one starts Python workers)."""
+    docs = spark.createDataFrame(
+        [(1, []), (2, [])], "doc_id long, grams array<long>"
+    )
+    out = jaccard_self_join(docs, "doc_id", "grams", 0.5, strategy="dense")
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    assert out.collect() == []
+    assert out.columns == ["id_lo", "id_hi", "n_shared", "jaccard"]
+
+
 def test_forced_dense_over_universe_cap_raises(spark):
     """strategy="dense" must refuse a gram universe above its cap instead of
     collecting an unbounded dictionary to the driver."""
