@@ -227,7 +227,6 @@ def build_pairs(
             matchable,
             "id",
             "text",
-            cfg.k_shingle,
             shingle_col="shingle_hashes",
             # winnowed anchor universe precomputed by the signature kernel
             # when cfg.containment_winnow_w is set (compute_docs)

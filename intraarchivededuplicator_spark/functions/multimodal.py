@@ -7,8 +7,8 @@ media as opaque `binary` columns with typed metadata, decode / feature /
 resize / frame-sample as Arrow-batched `mapInPandas` stages so each executor
 processes whole record batches without per-row Python.
 
-`decode_backend="real"` decodes ALL THREE media types for real, even in
-codec-free containers like this one: images via built-in dependency-free
+decode_media decodes ALL THREE media types for real, even without codec
+libraries installed: images via built-in dependency-free
 PPM/PGM/BMP parsers (tried first, so features are bit-stable across
 environments) with a PIL fallback for compressed formats (PNG/JPEG/WebP/...);
 audio via a built-in RIFF WAVE PCM parser with RMS energy-envelope features
@@ -16,14 +16,11 @@ in the same FEATURE_DIM space; video via a built-in RIFF AVI
 uncompressed-DIB parser (frame-sampled temporal aHash mean-pool) with an
 optional pyav fallback for codec-compressed containers. All three are
 golden-tested; undecodable payloads quarantine (null features), never abort
-the job. The default `decode_backend="fake"` derives deterministic
-dimensions / frames / features from the payload bytes (blake2b) for
-plumbing tests that must not depend on any codec.
+the job.
 """
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import numpy as np
@@ -63,41 +60,6 @@ DECODED_SCHEMA = StructType(
 )
 
 FEATURE_DIM = 64
-
-
-def _fake_decode_batch(payloads: pd.Series, media_types: pd.Series) -> pd.DataFrame:
-    """Deterministic stand-in for a codec: dims/frames/features from bytes."""
-    n = len(payloads)
-    width = np.zeros(n, dtype=np.int32)
-    height = np.zeros(n, dtype=np.int32)
-    frames = np.ones(n, dtype=np.int32)
-    feats: list[list[float] | None] = []
-    for i, (raw, mt) in enumerate(zip(payloads, media_types)):
-        if raw is None:
-            feats.append(None)
-            continue
-        d = hashlib.blake2b(bytes(raw), digest_size=8).digest()
-        df_ = hashlib.blake2b(
-            bytes(raw), digest_size=FEATURE_DIM, person=b"feat"
-        ).digest()
-        width[i] = 16 + d[0] * 4
-        height[i] = 16 + d[1] * 4
-        frames[i] = 1 if mt == "image" else 1 + int.from_bytes(d[2:4], "big") % 300
-        v = np.frombuffer(df_, dtype=np.uint8).astype(np.float32)
-        v = (v - 127.5) / 127.5
-        v /= np.linalg.norm(v) or 1.0
-        feats.append([float(x) for x in v])
-    return pd.DataFrame(
-        {
-            "n_bytes": payloads.map(lambda b: 0 if b is None else len(b)).astype(
-                "int32"
-            ),
-            "width": width,
-            "height": height,
-            "n_frames": frames,
-            "features": feats,
-        }
-    )
 
 
 def _try_pil_decode(raw: bytes) -> np.ndarray | None:
@@ -535,18 +497,16 @@ def _real_decode_batch(payloads: pd.Series, media_types: pd.Series) -> pd.DataFr
     )
 
 
-def decode_media(media: DataFrame, decode_backend: str = "fake") -> DataFrame:
+def decode_media(media: DataFrame) -> DataFrame:
     """media(MEDIA_SCHEMA) -> DECODED_SCHEMA via Arrow-batched mapInPandas.
 
     mapInPandas (not a scalar UDF) because decode is multi-column-in,
     multi-column-out and benefits from whole-batch vectorization — the H4
     dispatcher shape (/root/reference/scanner/hashFile.py:135-164).
     """
-    decode = _fake_decode_batch if decode_backend == "fake" else _real_decode_batch
-
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = decode(pdf["payload"], pdf["media_type"])
+            out = _real_decode_batch(pdf["payload"], pdf["media_type"])
             yield pd.concat(
                 [pdf[["media_id", "url", "media_type"]].reset_index(drop=True), out],
                 axis=1,

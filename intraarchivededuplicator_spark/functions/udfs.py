@@ -1,13 +1,16 @@
-"""Vectorized (Arrow-batched) pandas UDFs for the signature surface.
+"""Arrow-batched pandas UDFs for the signature surface.
 
-The reference computes MD5 + pHash per item in worker processes
-(/root/reference/scanner/hashFile.py:135-164); here the same surface is one
-Arrow-batched pass per partition — no per-row Python, per BASELINE input_hint.
+Two shingle-hash families:
+
+- spec: md5 of the shingle string, which the DuckDB oracles recompute in
+  SQL. simhash64_udf wraps hashing.simhash64_batch; the MinHash and
+  shingle-set UDFs reduce one per-document loop, `_spec_shingle_sets`
+  (hashing.shingle_hash32 per distinct shingle).
+- fast: md5 per token plus a polynomial shingle mix, the pipeline's scale
+  kernel (hashing.signatures_batch), exposed by make_fast_signatures_udf.
 """
 
 from __future__ import annotations
-
-import hashlib
 
 import numpy as np
 import pandas as pd
@@ -29,75 +32,60 @@ def simhash64_udf(texts: pd.Series) -> pd.Series:
     return pd.Series(simhash64_batch(texts.tolist()))
 
 
-def make_simhash_udf(shingle_k: int):
-    """simhash64 pandas UDF with a non-default shingle width."""
-
-    @F.pandas_udf(LongType())
-    def _udf(texts: pd.Series) -> pd.Series:
-        return pd.Series(simhash64_batch(texts.tolist(), shingle_k))
-
-    return _udf
+def _spec_shingle_sets(texts: pd.Series, k_shingle: int):
+    """Yields each doc's DISTINCT shingle_hash32 values as a sorted int64
+    array, or None below k_shingle tokens: the spec family's one per-document
+    loop, which the MinHash and shingle-set UDFs reduce. md5 runs once per
+    distinct shingle string in the batch (memoized), which beats Spark's
+    interpreted higher-order array functions (transform/aggregate/slice) by
+    ~10x here."""
+    memo: dict[str, int] = {}
+    for text in texts:
+        sh = shingles(tokenize(text) if isinstance(text, str) else [], k_shingle)
+        if not sh:
+            yield None
+            continue
+        hs = []
+        for s in set(sh):
+            h = memo.get(s)
+            if h is None:
+                h = memo[s] = shingle_hash32(s)
+            hs.append(h)
+        yield np.unique(np.array(hs, dtype=np.int64))
 
 
 def make_minhash_udf(k_shingle: int, params: MinHashParams):
-    """Returns a pandas UDF text -> array<long> MinHash signature (null if no shingles)."""
+    """text -> array<long> MinHash signature (null if no shingles); equals
+    hashing.minhash_sig."""
     a = np.array(params.a, dtype=np.int64)[:, None]
     b = np.array(params.b, dtype=np.int64)[:, None]
 
     @F.pandas_udf(ArrayType(LongType()))
     def minhash_udf(texts: pd.Series) -> pd.Series:
-        out = []
-        memo: dict[str, int] = {}
-        for text in texts:
-            toks = tokenize(text) if isinstance(text, str) else []
-            sh = shingles(toks, k_shingle)
-            if not sh:
-                out.append(None)
-                continue
-            uniq = set(sh)
-            hs = np.empty(len(uniq), dtype=np.int64)
-            for i, s in enumerate(uniq):
-                h = memo.get(s)
-                if h is None:
-                    h = shingle_hash32(s)
-                    memo[s] = h
-                hs[i] = h
-            vals = (a * hs[None, :] + b) % MINHASH_PRIME
-            out.append(vals.min(axis=1).tolist())
-        return pd.Series(out)
+        return pd.Series(
+            [
+                None
+                if hs is None
+                else ((a * hs[None, :] + b) % MINHASH_PRIME).min(axis=1).tolist()
+                for hs in _spec_shingle_sets(texts, k_shingle)
+            ]
+        )
 
     return minhash_udf
 
 
 def make_shingle_hashes_udf(k_shingle: int):
-    """text -> array<long> of DISTINCT shingle_hash32 values (null if none).
-
-    The engine's shingle-set representation, computed once per doc in the
-    signature pass and carried in the docs table so Jaccard verification and
-    containment anchors never recompute it. Python + md5 with per-batch
-    memoization beats Spark's interpreted higher-order array functions
-    (transform/aggregate/slice) by ~10x here.
-    """
+    """text -> sorted array<long> of DISTINCT shingle_hash32 values (null if
+    none): the spec family's shingle set, which the DuckDB oracle recomputes."""
 
     @F.pandas_udf(ArrayType(LongType()))
     def shingle_hashes_udf(texts: pd.Series) -> pd.Series:
-        out = []
-        memo: dict[str, int] = {}
-        for text in texts:
-            toks = tokenize(text) if isinstance(text, str) else []
-            sh = shingles(toks, k_shingle)
-            if not sh:
-                out.append(None)
-                continue
-            vals = set()
-            for s in sh:
-                h = memo.get(s)
-                if h is None:
-                    h = shingle_hash32(s)
-                    memo[s] = h
-                vals.add(h)
-            out.append(sorted(vals))
-        return pd.Series(out)
+        return pd.Series(
+            [
+                None if hs is None else hs.tolist()
+                for hs in _spec_shingle_sets(texts, k_shingle)
+            ]
+        )
 
     return shingle_hashes_udf
 
@@ -149,74 +137,3 @@ def make_fast_signatures_udf(
         )
 
     return fast_sig_udf
-
-
-def make_winnow_shingles_udf(k_shingle: int, winnow_w: int):
-    """text -> struct(shingle_hashes array<long>, win_interior array<long>,
-    win_boundary array<long>): the full distinct shingle-hash set plus its
-    winnow_split (hashing), all from ONE tokenize + hash pass — the
-    standalone-containment twin of make_fast_signatures_udf(winnow_w=...)."""
-    from pyspark.sql.types import StructField, StructType
-
-    from .hashing import _shingle_mix, tokenize, winnow_split
-
-    schema = StructType(
-        [
-            StructField("shingle_hashes", ArrayType(LongType())),
-            StructField("win_interior", ArrayType(LongType())),
-            StructField("win_boundary", ArrayType(LongType())),
-        ]
-    )
-
-    @F.pandas_udf(schema)
-    def winnow_udf(texts: pd.Series) -> pd.DataFrame:
-        sh_out, wi_out, wb_out = [], [], []
-        tok_memo: dict[str, int] = {}
-        for text in texts:
-            toks = tokenize(text) if isinstance(text, str) else []
-            if len(toks) < k_shingle:
-                sh_out.append(None)
-                wi_out.append(None)
-                wb_out.append(None)
-                continue
-            th = np.empty(len(toks), dtype=np.uint64)
-            for j, t in enumerate(toks):
-                h = tok_memo.get(t)
-                if h is None:
-                    h = int.from_bytes(
-                        hashlib.md5(t.encode("utf-8")).digest()[:8], "big"
-                    )
-                    tok_memo[t] = h
-                th[j] = h
-            seq = (_shingle_mix(th, k_shingle) >> np.uint64(32)).astype(np.int64)
-            wi, wb = winnow_split(seq, winnow_w)
-            sh_out.append(np.unique(seq).tolist())
-            wi_out.append(wi.tolist())
-            wb_out.append(wb.tolist())
-        return pd.DataFrame(
-            {
-                "shingle_hashes": sh_out,
-                "win_interior": wi_out,
-                "win_boundary": wb_out,
-            }
-        )
-
-    return winnow_udf
-
-
-def make_min_shingle_udf(k_shingle: int):
-    """text -> smallest shingle_hash32 over its k-shingles (null if none).
-
-    Rolling-hash document fingerprint (winnowing-style anchor); also the
-    anchor used by the containment candidate generator.
-    """
-
-    @F.pandas_udf(LongType())
-    def min_shingle_udf(texts: pd.Series) -> pd.Series:
-        out = []
-        for text in texts:
-            sh = shingles(tokenize(text) if isinstance(text, str) else [], k_shingle)
-            out.append(min(shingle_hash32(s) for s in sh) if sh else None)
-        return pd.Series(out, dtype="object")
-
-    return min_shingle_udf

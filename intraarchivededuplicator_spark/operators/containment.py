@@ -7,9 +7,10 @@ unique item at :388-390). Here: doc A's *text* appears as an exact substring
 of doc B's text.
 
 Distributed plan (no O(n^2)):
- 1. anchor generation — each inner-candidate doc contributes its *minimum*
-    k-shingle hash (a winnowing anchor). If A ⊂ B at token boundaries, every
-    A-shingle is a B-shingle, so A's min-shingle is in B's shingle set.
+ 1. anchor generation — each inner-candidate doc contributes its 3 rarest
+    shared shingle hashes, read from the shingle-set column a signature
+    kernel computed. If A ⊂ B at token boundaries, every interior A-shingle
+    is a B-shingle, so at least one anchor is in B's shingle set.
  2. candidate join — explode outer docs' distinct shingle hashes, semi-join
     against the broadcast anchor set, then equi-join anchors == shingles.
     Shuffle volume: one row per (outer doc, anchored shingle), not n^2.
@@ -26,42 +27,29 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.columns import token_shingles, tokens
+from ..functions.columns import tokens
 
-
-def _shingle_hashes32(text_col: str, k: int) -> F.Column:
-    """Distinct shingle_hash32 values, JVM-side: md5 -> first 8 hex -> conv.
-
-    Kept only for oracle-parity queries (plans/queries.q_doc_fingerprint);
-    the engine path uses columns.shingle_hashes64 (xxhash64, ~20x cheaper)."""
-    sh = token_shingles(tokens(F.col(text_col)), k)
-    return F.array_distinct(
-        F.transform(
-            sh,
-            lambda s: F.conv(
-                F.substring(F.md5(F.encode(s, "UTF-8")), 1, 8), 16, 10
-            ).cast("long"),
-        )
-    )
+# anchor slots whose candidate volume (inners x outer df) exceeds this are
+# skipped; see containment_pairs' skew note
+HOT_ANCHOR_CAP = 250_000
 
 
 def containment_pairs(
     docs: DataFrame,
     id_col: str = "id",
     text_col: str = "text",
-    k_shingle: int = 5,
-    shingle_col: str | None = None,
-    hot_anchor_cap: int | None = 250_000,
+    *,
+    shingle_col: str,
     broadcast_anchors: bool = True,
-    winnow_w: int | None = None,
     winnow_interior_col: str | None = None,
     winnow_boundary_col: str | None = None,
 ) -> DataFrame:
     """(inner_id, outer_id) where inner text ⊂ outer text, len(inner) < len(outer).
 
-    Pass shingle_col when the docs table already carries the shingle-hash set
-    (engine/pipeline computes it once in the signature pass) — anchors and the
-    outer explode then reuse it with zero recomputation.
+    shingle_col names each doc's distinct shingle-hash set (array<long>,
+    null below k_shingle tokens), computed by a signature kernel before the
+    call: compute_docs carries it as shingle_hashes. The operator hashes
+    nothing itself; anchors and the outer explode read that column.
 
     Candidate plan (ids only — no text leaves its partition until the final
     verify): min-anchor equi-join -> shingle-subset filter (containment
@@ -93,12 +81,10 @@ def containment_pairs(
     occur in the outer. A common shingle can therefore never accumulate a
     large anchor group; only true near-identical mega-clusters (where every
     shingle is shared by all m members) stay hot, and anchor slots whose
-    inner x df product exceeds hot_anchor_cap are skipped (per slot — a doc
+    inner x df product exceeds HOT_ANCHOR_CAP are skipped (per slot — a doc
     skipped on one hot anchor still joins via its other anchors) — residual
     connectivity is the SimHash/Jaccard legs' job (the reference's
-    >100-candidate skip,
-    /root/reference/deduplicator/ProcessArchive.py:504-513). None disables
-    the cap.
+    >100-candidate skip, deduplicator/ProcessArchive.py:504-513).
 
     Shuffle budget (the scale story): three corpus x shingle-sized
     exchanges — df groupBy, the df>=2 join-back, and one per-doc window
@@ -113,8 +99,9 @@ def containment_pairs(
     False to keep it a shuffle semi-join (both sides partitioned on the
     shingle hash), which is the scale-safe plan VERDICT r1 asked for.
 
-    winnow_w (opt-in): shrink the df/anchor exchange ~(w+1)/2-fold by
-    exploding each doc's WINNOWED shingle selection (window-w sliding min,
+    winnow_interior_col / winnow_boundary_col (opt-in, both or neither):
+    shrink the df/anchor exchange ~(w+1)/2-fold by exploding each doc's
+    WINNOWED shingle selection (window-w sliding min,
     functions/hashing.winnow_split) instead of its full shingle set. The
     recall guarantee stays deterministic: anchors are drawn only from
     *interior*-window selections, which a true outer provably also selects
@@ -126,33 +113,15 @@ def containment_pairs(
     doc with fewer than winnow_w + 2 shingles has no interior window and
     cannot be detected as an INNER — enable winnowing only where true inner
     duplicates are longer than winnow_w + k_shingle + 1 tokens (web pages:
-    yes; tweet-sized corpora: keep None). Pass winnow_interior_col /
-    winnow_boundary_col when compute_docs already carries the split
-    (engine/pipeline with cfg.containment_winnow_w); otherwise the split is
-    computed here from the text.
+    yes; tweet-sized corpora: leave the columns out). The fast signature
+    kernel emits both columns (make_fast_signatures_udf(winnow_w=...);
+    compute_docs under cfg.containment_winnow_w).
     """
-    winnowing = winnow_interior_col is not None or winnow_w is not None
-    if winnowing and winnow_interior_col is None:
-        # compute full set + winnow split in ONE kernel pass over the text
-        from ..functions.udfs import make_winnow_shingles_udf
-
-        sig = make_winnow_shingles_udf(k_shingle, winnow_w)(F.col(text_col))
-        docs = (
-            docs.withColumn("_wsig", sig)
-            .withColumn("_sh", F.col("_wsig.shingle_hashes"))
-            .withColumn("_wint", F.col("_wsig.win_interior"))
-            .withColumn("_wbnd", F.col("_wsig.win_boundary"))
-            .drop("_wsig")
+    winnowing = winnow_interior_col is not None
+    if winnowing != (winnow_boundary_col is not None):
+        raise ValueError(
+            "pass both winnow_interior_col and winnow_boundary_col, or neither"
         )
-        shingle_col = "_sh"
-        winnow_interior_col, winnow_boundary_col = "_wint", "_wbnd"
-    elif shingle_col is None:
-        from ..functions.udfs import make_shingle_hashes_udf
-
-        docs = docs.withColumn(
-            "_sh", make_shingle_hashes_udf(k_shingle)(F.col(text_col))
-        )
-        shingle_col = "_sh"
     # one fragment shingle per end at most (see docstring) — NOT k-dependent
     slack = 2
     base = docs.filter(F.col(shingle_col).isNotNull()).select(
@@ -270,14 +239,14 @@ def containment_pairs(
             F.col("df").alias("_adf"),
         )
     )
-    if hot_anchor_cap is not None:
-        # skip anchor slots whose candidate volume (inners x outer df) would
-        # blow up — one window over the small inner table, no extra join
-        n_in = F.count("*").over(Window.partitionBy("anchor"))
-        inner = inner.withColumn("_n_in", n_in).filter(
-            F.col("_n_in") * F.col("_adf") <= hot_anchor_cap
-        )
-    inner = inner.select("inner_id", "inner_len", "anchor")
+    # skip anchor slots whose candidate volume (inners x outer df) would
+    # blow up — one window over the small inner table, no extra join
+    n_in = F.count("*").over(Window.partitionBy("anchor"))
+    inner = (
+        inner.withColumn("_n_in", n_in)
+        .filter(F.col("_n_in") * F.col("_adf") <= HOT_ANCHOR_CAP)
+        .select("inner_id", "inner_len", "anchor")
+    )
     if broadcast_anchors:
         inner = F.broadcast(inner)
     # candidate join: outer shingle rows x inner anchors. The equi-join on

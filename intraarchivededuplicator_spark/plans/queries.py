@@ -28,7 +28,12 @@ from ..functions.columns import (
     tokens,
 )
 from ..functions.hashing import MinHashParams
-from ..functions.udfs import make_min_shingle_udf, make_minhash_udf, simhash64_udf
+from ..functions.udfs import (
+    make_fast_signatures_udf,
+    make_minhash_udf,
+    make_shingle_hashes_udf,
+    simhash64_udf,
+)
 from ..operators.banded_join import banded_radius_search, banded_self_join
 from ..operators.cluster import assign_clusters
 from ..operators.containment import containment_pairs
@@ -407,8 +412,6 @@ def q_minhash_jaccard_estimate(spark, sf_dir):
     the pair ids, the ann_topk discipline). est denominator 16 = 2^4, so
     round6 of the estimate is exact in both engines; the exact Jaccard
     divides the same integers in both."""
-    from ..functions.udfs import make_minhash_udf, make_shingle_hashes_udf
-
     n_perm = len(ORACLE_MINHASH.a)
     mh = make_minhash_udf(K_SHINGLE, ORACLE_MINHASH)
     shu = make_shingle_hashes_udf(K_SHINGLE)
@@ -480,7 +483,6 @@ def q_minhash_recall_audit(spark, sf_dir):
     Boundary discipline: the truth filter is expressed as 2*i >= u in BOTH
     engines (for i,u << 2^52 this is exactly the FP j >= 0.5 the operator
     applies, made explicit)."""
-    from ..functions.udfs import make_minhash_udf, make_shingle_hashes_udf
     from ..operators.setsim import jaccard_self_join
 
     mh = make_minhash_udf(K_SHINGLE, ORACLE_MINHASH)
@@ -591,16 +593,14 @@ def q_containment_pairs(spark, sf_dir):
     # signature pass shares (engine/pipeline computes it once for all legs).
     # Its blocks are freed by the ContextCleaner once the result is dropped;
     # a persist() would stay in the session's cache manager.
-    from ..functions.udfs import make_shingle_hashes_udf
-
     d = load(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("id"),
         "text",
         make_shingle_hashes_udf(K_SHINGLE)(F.col("text")).alias("_sh"),
     ).localCheckpoint()
-    return containment_pairs(
-        d, "id", "text", K_SHINGLE, shingle_col="_sh"
-    ).select("inner_id", "outer_id")
+    return containment_pairs(d, "id", "text", shingle_col="_sh").select(
+        "inner_id", "outer_id"
+    )
 
 
 def q_containment_pairs_winnowed(spark, sf_dir):
@@ -611,10 +611,11 @@ def q_containment_pairs_winnowed(spark, sf_dir):
     table's minimum is 10 tokens = 6 shingles at k=5, so w=3 keeps at least
     one interior window for every doc — identical result set, ~half the
     df/anchor exchange. (The flagship web-page pipeline uses w=8 for the
-    full ~4.5x cut; see DedupConfig.containment_winnow_w.)"""
-    from ..functions.udfs import make_winnow_shingles_udf
-
-    sig = make_winnow_shingles_udf(K_SHINGLE, 3)(F.col("text"))
+    full ~4.5x cut; see DedupConfig.containment_winnow_w.) The shingle set
+    and its winnow split come from the pipeline's fast signature kernel."""
+    sig = make_fast_signatures_udf(K_SHINGLE, ORACLE_MINHASH, winnow_w=3)(
+        F.col("text")
+    )
     d = (
         load(spark, sf_dir, "documents")
         .select(F.col("doc_id").alias("id"), "text", sig.alias("_wsig"))
@@ -631,7 +632,6 @@ def q_containment_pairs_winnowed(spark, sf_dir):
         d,
         "id",
         "text",
-        K_SHINGLE,
         shingle_col="_sh",
         winnow_interior_col="_wint",
         winnow_boundary_col="_wbnd",
@@ -933,19 +933,19 @@ def q_langid_confusion(spark, sf_dir):
 
 
 def q_doc_fingerprint(spark, sf_dir):
-    """Winnowing-style fingerprint: min shingle hash + distinct-shingle count."""
-    from ..operators.containment import _shingle_hashes32
-
-    d = load(spark, sf_dir, "documents")
-    min_sh = make_min_shingle_udf(K_SHINGLE)
-    sh = _shingle_hashes32("text", K_SHINGLE)
+    """Winnowing-style fingerprint: min shingle hash + distinct-shingle count,
+    both read from the spec shingle set (docs below K_SHINGLE tokens have
+    none and emit no row)."""
+    sh = make_shingle_hashes_udf(K_SHINGLE)(F.col("text"))
     return (
-        d.select(
+        load(spark, sf_dir, "documents")
+        .select("doc_id", sh.alias("_sh"))
+        .filter(F.col("_sh").isNotNull())
+        .select(
             "doc_id",
-            min_sh(F.col("text")).alias("min_shingle"),
-            F.size(sh).cast("long").alias("n_distinct_shingles"),
+            F.array_min("_sh").alias("min_shingle"),
+            F.size("_sh").cast("long").alias("n_distinct_shingles"),
         )
-        .filter(F.col("min_shingle").isNotNull())
     )
 
 
@@ -2713,7 +2713,7 @@ def q_media_decode_dims(spark, sf_dir):
 
     Payloads are synthesized deterministically per doc_id inside Spark
     (fixtures/synth.synthesize_media: PPM image / WAV PCM audio / AVI DIB
-    video, cycling by doc_id % 3), decoded by decode_media(real) — the
+    video, cycling by doc_id % 3), decoded by decode_media — the
     actual dependency-free parsers through the actual mapInPandas plumbing —
     and the projected dims / frame counts are pure arithmetic in doc_id, so
     the DuckDB oracle (sql_media_decode_dims) predicts every cell. `ok`
@@ -2724,7 +2724,7 @@ def q_media_decode_dims(spark, sf_dir):
     from ..functions.multimodal import decode_media
 
     d = load(spark, sf_dir, "documents").select("doc_id")
-    dec = decode_media(synthesize_media(d), decode_backend="real")
+    dec = decode_media(synthesize_media(d))
     return dec.select(
         F.col("media_id").alias("doc_id"),
         "media_type",
@@ -2748,7 +2748,7 @@ def q_media_near_dup_pairs(spark, sf_dir):
     from ..functions.multimodal import decode_media, media_near_dup_pairs
 
     d = load(spark, sf_dir, "documents").select("doc_id")
-    dec = decode_media(synthesize_media(d, dup_stride=3), decode_backend="real")
+    dec = decode_media(synthesize_media(d, dup_stride=3))
     return media_near_dup_pairs(dec, hamming_radius=4).select("id_lo", "id_hi")
 
 
@@ -2765,7 +2765,7 @@ def q_media_near_dup_pairs_ivf(spark, sf_dir):
     from ..functions.multimodal import decode_media, media_near_dup_pairs_ivf
 
     d = load(spark, sf_dir, "documents").select("doc_id")
-    dec = decode_media(synthesize_media(d, dup_stride=3), decode_backend="real")
+    dec = decode_media(synthesize_media(d, dup_stride=3))
     return media_near_dup_pairs_ivf(dec, threshold=0.98).select("id_lo", "id_hi")
 
 
@@ -2783,7 +2783,7 @@ def q_media_resized_dims(spark, sf_dir):
 
     d = load(spark, sf_dir, "documents").select("doc_id")
     rs = resize_media(synthesize_media(d), out_w=10, out_h=9, out_rate=4000)
-    dec = decode_media(rs, decode_backend="real")
+    dec = decode_media(rs)
     return dec.select(
         F.col("media_id").alias("doc_id"),
         "media_type",
@@ -2804,7 +2804,7 @@ def q_media_frame_sample(spark, sf_dir):
     from ..functions.multimodal import decode_media, frame_sample
 
     d = load(spark, sf_dir, "documents").select("doc_id")
-    dec = decode_media(synthesize_media(d), decode_backend="real")
+    dec = decode_media(synthesize_media(d))
     return frame_sample(dec, every_n=2, max_frames=16).select(
         F.col("media_id").alias("doc_id"), F.col("frame_idx").cast("int").alias("frame_idx")
     )
@@ -3115,7 +3115,7 @@ def q_stream_near_dedup_replay(spark, sf_dir):
     event time), a real availableNow Structured Streaming query runs
     stream_simhash_near_pairs (applyInPandasWithState) into a parquet sink,
     and the sink is returned mapped back to doc_ids. Same kernel
-    (simhash64, shingle_k=3), radius, horizon, and blacklist as
+    (simhash64_udf, 3-token shingles), radius, horizon, and blacklist as
     q_near_pairs_within_horizon, so the SAME DuckDB oracle applies — the
     stream/batch equivalence tests/test_streaming_near_dedup.py pins is now
     also driver-hash-checked."""
@@ -3591,8 +3591,6 @@ def q_simhash_pair_precision(spark, sf_dir):
     shingle sets join ONLY the survivors (two shuffle-hash joins on pair
     ids, the ann_topk discipline); docs without a shingle set (< K_SHINGLE
     tokens) drop from the audit in both engines."""
-    from ..functions.udfs import make_shingle_hashes_udf
-
     shu = make_shingle_hashes_udf(K_SHINGLE)
     d = docs_with_sig(spark, sf_dir).select(
         "doc_id", "simhash", shu(F.col("text")).alias("shset")

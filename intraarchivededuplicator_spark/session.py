@@ -11,6 +11,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import DataType
 
+# the directory that holds the package, for the Python workers' import path
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app: str = "iad-spark",
@@ -37,6 +40,11 @@ def get_spark(
     sized to 1000 entries, ~3x the measured surface: a warm pass compiles
     0 classes. The conf is static (Spark reads it once per JVM), so it is
     set here, before getOrCreate; extra_conf still overrides it.
+
+    Python workers: the package root goes on the workers' PYTHONPATH
+    (spark.executorEnv.PYTHONPATH), so a driver that imports the package
+    only through sys.path, from any working directory, can still run the
+    engine's pandas UDFs.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     master = master or f"local[{cpus}]"
@@ -89,6 +97,7 @@ def get_spark(
         # generated-class cache sized above the measured plan surface
         # (flagship pass ~215 classes + keep-list queries ~120; see docstring)
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     if local_dir:
         b = b.config("spark.local.dir", local_dir)

@@ -82,32 +82,6 @@ def run_ingest_stream(
     return writer.trigger(processingTime="30 seconds").start()
 
 
-def stream_exact_dedup(
-    pages: DataFrame,
-    watermark: str = "24 hours",
-    extract: bool = True,
-) -> DataFrame:
-    """Streaming exact-dedup: keep the FIRST arrival per content hash within
-    the watermark horizon (the streaming analog of the exact-first leg; the
-    reference's equivalent is the scanner's skip-if-hash-unchanged re-scan
-    gate, /root/reference/scanner/fileHasher.py:333-341, which the batch
-    path realizes as sources/ingest.incremental_ingest).
-
-    dropDuplicatesWithinWatermark keeps the dedup state bounded by the
-    watermark window — a plain dropDuplicates on an unbounded crawl stream
-    grows state forever and is not a 100 TB plan. Re-crawls of identical
-    content older than the horizon re-emit (and are then collapsed by the
-    batch MERGE downstream); that is the correct bounded-state trade.
-    """
-    from ..functions.textprep import with_extracted_text
-    from ..operators.exact import with_text_hash
-
-    hashed = with_text_hash(with_extracted_text(pages) if extract else pages)
-    return hashed.withWatermark("warc_ts", watermark).dropDuplicatesWithinWatermark(
-        ["text_hash"]
-    )
-
-
 def crawl_rate(pages: DataFrame, window: str = "1 hour", watermark: str = "2 hours") -> DataFrame:
     """Event-time pages/window with late-data watermark; works on both batch
     and streaming DataFrames (same plan, per Structured Streaming semantics)."""

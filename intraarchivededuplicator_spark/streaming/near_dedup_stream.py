@@ -59,7 +59,7 @@ from pyspark.sql.types import (
 
 from ..config import DEFAULT_CONFIG, DedupConfig, bands_for_radius
 from ..functions.hashing import band_keys_np, popcount64_np
-from ..functions.udfs import make_simhash_udf
+from ..functions.udfs import simhash64_udf
 from ..operators.banded_join import banded_self_join, explode_bands
 
 PAIRS_SCHEMA = StructType(
@@ -203,7 +203,6 @@ def stream_simhash_near_pairs(
     hot_cap: int = 4096,
     cfg: DedupConfig = DEFAULT_CONFIG,
     extract: bool = True,
-    shingle_k: int = 3,
 ) -> DataFrame:
     """Verified near-dup pairs (hamming <= radius, |ts delta| <= horizon) over
     an unbounded page stream, emitted exactly once as the later page arrives.
@@ -223,9 +222,8 @@ def stream_simhash_near_pairs(
         from ..functions.textprep import with_extracted_text
 
         pages = with_extracted_text(pages)
-    sig_udf = make_simhash_udf(shingle_k)
     docs = (
-        pages.select("url", "warc_ts", sig_udf(F.col("text")).alias("sig"))
+        pages.select("url", "warc_ts", simhash64_udf(F.col("text")).alias("sig"))
         .filter(F.col("sig").isNotNull())
         .filter(~F.col("sig").isin(list(cfg.blacklist)))
     )

@@ -493,13 +493,25 @@ def _make_avi(frames_pix, w, h):
 
 
 def _media(spark):
+    """Real payloads for the decoder: two byte-identical 8x8 PGM images, a
+    25-frame uncompressed AVI video and a null payload."""
+    from intraarchivededuplicator_spark.functions.multimodal import (
+        _encode_avi_dib,
+        _encode_pgm,
+    )
+
+    rng = np.random.RandomState(11)
+    image = _encode_pgm(rng.randint(0, 256, size=(8, 8)).astype(np.float64))
+    video = _encode_avi_dib(
+        [rng.randint(0, 256, size=(8, 8)).astype(np.float64) for _ in range(25)]
+    )
     rows = [
-        Row(media_id=1, url="http://m/a.png", media_type="image", payload=b"PNG" * 40),
-        Row(media_id=2, url="http://m/a2.png", media_type="image", payload=b"PNG" * 40),
-        Row(media_id=3, url="http://m/b.mp4", media_type="video", payload=b"MP4" * 99),
+        Row(media_id=1, url="http://m/a.pgm", media_type="image", payload=image),
+        Row(media_id=2, url="http://m/a2.pgm", media_type="image", payload=image),
+        Row(media_id=3, url="http://m/b.avi", media_type="video", payload=video),
         Row(media_id=4, url="http://m/null", media_type="image", payload=None),
     ]
-    return spark.createDataFrame(rows)
+    return spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
 
 
 class TestMultimodal:
@@ -513,7 +525,7 @@ class TestMultimodal:
         assert rows[4]["features"] is None and rows[4]["n_bytes"] == 0
 
     def test_real_backend_decodes_avi_dib_golden(self, spark):
-        """decode_backend='real' on genuine video bytes (RIFF AVI with
+        """decode_media on genuine video bytes (RIFF AVI with
         uncompressed 24-bit DIB frames — real container, no codec lib):
         dims + frame count from the container, features = temporal mean of
         per-frame aHash, checked against the module's own aHash on the
@@ -530,7 +542,7 @@ class TestMultimodal:
         avi = _make_avi([f1, f2], w, h)
         rows = [Row(media_id=1, url="a.avi", media_type="video", payload=avi)]
         out = decode_media(
-            spark.createDataFrame(rows, schema=MEDIA_SCHEMA), decode_backend="real"
+            spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
         ).collect()[0]
         assert (out["width"], out["height"], out["n_frames"]) == (w, h, 2)
         assert len(out["features"]) == FEATURE_DIM
@@ -571,8 +583,7 @@ class TestMultimodal:
         got = {
             r["media_id"]: r
             for r in decode_media(
-                spark.createDataFrame(rows, schema=MEDIA_SCHEMA),
-                decode_backend="real",
+                spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
             ).collect()
         }
         assert got[1]["n_frames"] == 1
@@ -591,8 +602,7 @@ class TestMultimodal:
         got = {
             r["media_id"]: r
             for r in decode_media(
-                spark.createDataFrame(rows, schema=MEDIA_SCHEMA),
-                decode_backend="real",
+                spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
             ).collect()
         }
         assert got[1]["features"] is None
@@ -600,7 +610,7 @@ class TestMultimodal:
         assert got[3]["features"] is not None  # the intact twin still decodes
 
     def test_real_backend_decodes_wav_pcm_golden(self, spark):
-        """decode_backend='real' on genuine audio bytes (RIFF WAVE PCM16, no
+        """decode_media on genuine audio bytes (RIFF WAVE PCM16, no
         codec lib needed), checked against an independently computed RMS
         energy envelope."""
         import math
@@ -621,7 +631,7 @@ class TestMultimodal:
         )
         rows = [Row(media_id=1, url="a.wav", media_type="audio", payload=wav)]
         out = decode_media(
-            spark.createDataFrame(rows, schema=MEDIA_SCHEMA), decode_backend="real"
+            spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
         ).collect()[0]
         assert out["n_frames"] == n
         assert len(out["features"]) == FEATURE_DIM
@@ -663,15 +673,14 @@ class TestMultimodal:
         got = {
             r["media_id"]: r
             for r in decode_media(
-                spark.createDataFrame(rows, schema=MEDIA_SCHEMA),
-                decode_backend="real",
+                spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
             ).collect()
         }
         assert got[1]["n_frames"] == n and len(got[1]["features"]) == FEATURE_DIM
         assert got[2]["features"] is None
 
     def test_real_backend_decodes_ppm_golden(self, spark):
-        """decode_backend='real' on genuine image bytes (binary PPM, no codec
+        """decode_media on genuine image bytes (binary PPM, no codec
         needed), checked against an independently computed luma + mean-pool."""
         w = h = 16
         px = bytearray()
@@ -681,7 +690,7 @@ class TestMultimodal:
         ppm = b"P6\n# golden\n16 16\n255\n" + bytes(px)
         rows = [Row(media_id=1, url="p.ppm", media_type="image", payload=ppm)]
         out = decode_media(
-            spark.createDataFrame(rows, schema=MEDIA_SCHEMA), decode_backend="real"
+            spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
         ).collect()[0]
         assert (out["width"], out["height"]) == (16, 16)
         assert len(out["features"]) == FEATURE_DIM
@@ -746,8 +755,7 @@ class TestMultimodal:
         got = {
             r["media_id"]: r
             for r in decode_media(
-                spark.createDataFrame(rows, schema=MEDIA_SCHEMA),
-                decode_backend="real",
+                spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
             ).collect()
         }
         assert (got[1]["width"], got[1]["height"]) == (8, 8)
@@ -765,7 +773,7 @@ class TestMultimodal:
             Row(media_id=1, url="c.png", media_type="image", payload=buf.getvalue())
         ]
         out = decode_media(
-            spark.createDataFrame(rows, schema=MEDIA_SCHEMA), decode_backend="real"
+            spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
         ).collect()[0]
         assert (out["width"], out["height"]) == (16, 16)
         assert len(out["features"]) == FEATURE_DIM
@@ -775,7 +783,7 @@ class TestMultimodal:
             Row(media_id=1, url="x.bin", media_type="image", payload=b"\xff" * 64)
         ]
         out = decode_media(
-            spark.createDataFrame(rows, schema=MEDIA_SCHEMA), decode_backend="real"
+            spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
         ).collect()[0]
         assert out["features"] is None and out["n_bytes"] == 64
 
@@ -786,7 +794,7 @@ class TestMultimodal:
         ppm = b"P6\n10000 10000\n255\n" + b"\x01" * 300  # header lies
         rows = [Row(media_id=1, url="t.ppm", media_type="image", payload=ppm)]
         out = decode_media(
-            spark.createDataFrame(rows, schema=MEDIA_SCHEMA), decode_backend="real"
+            spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
         ).collect()[0]
         assert out["features"] is None
 
@@ -797,7 +805,7 @@ class TestMultimodal:
         tiny = b"P6\n2 2\n255\n" + bytes(range(12))
         rows = [Row(media_id=1, url="t.ppm", media_type="image", payload=tiny)]
         out = decode_media(
-            spark.createDataFrame(rows, schema=MEDIA_SCHEMA), decode_backend="real"
+            spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
         ).collect()[0]
         assert out["features"] is None
         assert (out["width"], out["height"]) == (2, 2)
@@ -848,9 +856,7 @@ class TestMultimodal:
         )
 
         docs = spark.range(0, 200).select(F.col("id").alias("doc_id"))
-        dec = decode_media(
-            synthesize_media(docs, dup_stride=3), decode_backend="real"
-        ).persist()
+        dec = decode_media(synthesize_media(docs, dup_stride=3)).persist()
         planted = {(i - 3, i) for i in range(3, 200) if i % 10 == 7}
         lsh = {
             (p["id_lo"], p["id_hi"])
@@ -902,7 +908,7 @@ class TestStreamingMediaDecode:
 
         def run_stream():
             q = (
-                decode_media(stream_media(spark, landing), decode_backend="real")
+                decode_media(stream_media(spark, landing))
                 .writeStream.format("parquet")
                 .option("path", out_dir)
                 .outputMode("append")
@@ -921,8 +927,7 @@ class TestStreamingMediaDecode:
         want = {
             r["media_id"]: r
             for r in decode_media(
-                spark.createDataFrame(batch1, schema=MEDIA_SCHEMA),
-                decode_backend="real",
+                spark.createDataFrame(batch1, schema=MEDIA_SCHEMA)
             ).collect()
         }
         assert got1[1]["features"] == want[1]["features"]

@@ -310,41 +310,3 @@ class TestBucketedCatalog:
         )
         got = {r["id"]: r["v"] for r in catalog.read("legacy").collect()}
         assert got[5] == 999 and len(got) == 13
-
-    def test_stream_exact_dedup_within_watermark(self, spark, tmp_path):
-        """Streaming exact-dedup keeps the first arrival per content hash
-        and drops later byte-identical pages within the watermark horizon;
-        state stays bounded (dropDuplicatesWithinWatermark, not the
-        unbounded dropDuplicates)."""
-        from intraarchivededuplicator_spark.streaming.ingest_stream import (
-            stream_exact_dedup,
-            stream_pages,
-        )
-
-        landing = str(tmp_path / "landing")
-        _pages(
-            spark,
-            [
-                ("http://d/1", "alpha body"),
-                ("http://d/2", "alpha body"),   # dup of d/1
-                ("http://d/3", "beta body"),
-            ],
-        ).write.parquet(landing)
-        _pages(spark, [("http://d/4", "beta body")]).write.mode(  # dup of d/3
-            "append"
-        ).parquet(landing)
-
-        out = stream_exact_dedup(stream_pages(spark, landing), extract=False)
-        q = (
-            out.writeStream.format("memory")
-            .queryName("dedup_out")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt2"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        got = spark.table("dedup_out").select("url", "text_hash").collect()
-        # one survivor per distinct content hash
-        assert len(got) == 2
-        assert len({r["text_hash"] for r in got}) == 2

@@ -8,7 +8,10 @@ Ports the reference's converter/distance test layers:
 """
 
 import numpy as np
+import pandas as pd
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from intraarchivededuplicator_spark.functions.hashing import (
     BAD_SIMHASHES,
@@ -146,6 +149,47 @@ class TestMinHash:
         agree_far = sum(a == b for a, b in zip(s_base, s_far))
         assert agree_near > 100
         assert agree_far < 10
+
+
+_TOKENS = st.sampled_from(["a", "b", "c", "tok", "日本語", "ø"])
+_SEPS = st.sampled_from(
+    [" ", "  ", "\t", "\n", "\r\n", "\x0b\x0c", "\u00a0", "\u3000"]
+)
+
+
+@st.composite
+def _spec_texts(draw):
+    """None, or a few tokens from a small vocabulary (so shingles repeat
+    within and across docs) joined and wrapped by mixed whitespace."""
+    if draw(st.integers(0, 7)) == 0:
+        return None
+    toks = draw(st.lists(_TOKENS, max_size=14))
+    seps = draw(st.lists(_SEPS, min_size=len(toks) + 1, max_size=len(toks) + 1))
+    return seps[0] + "".join(t + sep for t, sep in zip(toks, seps[1:]))
+
+
+class TestSpecShingleLoop:
+    """udfs' one spec-family loop, through both UDFs that reduce it, against
+    the scalar spec. The raw pandas functions run on one batch, so the md5
+    memo is shared across its docs as it is in a Spark worker."""
+
+    @settings(max_examples=200, deadline=None)
+    @given(st.lists(_spec_texts(), max_size=8), st.sampled_from([1, 3, 5]))
+    def test_udfs_match_scalar_spec(self, texts, k):
+        from intraarchivededuplicator_spark.functions.udfs import (
+            make_minhash_udf,
+            make_shingle_hashes_udf,
+        )
+
+        p = MinHashParams.make(8, seed=5)
+        batch = pd.Series(texts, dtype=object)
+        got_mh = make_minhash_udf(k, p).func(batch)
+        got_sh = make_shingle_hashes_udf(k).func(batch)
+        assert len(got_mh) == len(got_sh) == len(texts)
+        for text, mh, sh in zip(texts, got_mh, got_sh):
+            spec = shingles(tokenize(text), k)
+            assert mh == minhash_sig(text, k, p)
+            assert sh == (sorted({shingle_hash32(s) for s in spec}) or None)
 
 
 class TestSpecVsDuckDB:

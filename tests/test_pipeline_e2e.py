@@ -16,6 +16,7 @@ from intraarchivededuplicator_spark.engine.pipeline import (
     dedup_pipeline,
 )
 from intraarchivededuplicator_spark.fixtures.synth import gen_pages
+from intraarchivededuplicator_spark.functions.udfs import make_fast_signatures_udf
 from intraarchivededuplicator_spark.operators.banded_join import brute_force_pairs
 from intraarchivededuplicator_spark.operators.containment import (
     containment_pairs,
@@ -24,6 +25,21 @@ from intraarchivededuplicator_spark.operators.containment import (
 
 CFG = DedupConfig(hot_band_threshold=100, hot_band_salt=4)
 N_ROWS = 800
+WINNOW_COLS = {
+    "winnow_interior_col": "win_interior",
+    "winnow_boundary_col": "win_boundary",
+}
+
+
+def _signed(docs, winnow_w=None):
+    """docs(id, text) plus the fast kernel's shingle_hashes column (and its
+    win_interior / win_boundary split under winnow_w), as compute_docs
+    carries them."""
+    sig = make_fast_signatures_udf(
+        CFG.k_shingle, CFG.minhash_params, winnow_w=winnow_w
+    )(F.col("text"))
+    cols = ["shingle_hashes"] + (list(WINNOW_COLS.values()) if winnow_w else [])
+    return docs.select("id", "text", *(sig[c].alias(c) for c in cols))
 
 
 @pytest.fixture(scope="module")
@@ -171,10 +187,12 @@ def test_cluster_assignments_match_ground_truth_components(spark, corpus, result
 
 def test_containment_operator_differential(spark, corpus):
     pages, _, _ = corpus
-    docs = compute_docs(pages, CFG).select("id", "text").cache()
+    docs = compute_docs(pages, CFG).select("id", "text", "shingle_hashes").cache()
     got = {
         (r["inner_id"], r["outer_id"])
-        for r in containment_pairs(docs, "id", "text", CFG.k_shingle).collect()
+        for r in containment_pairs(
+            docs, "id", "text", shingle_col="shingle_hashes"
+        ).collect()
     }
     expect = {
         (r["inner_id"], r["outer_id"])
@@ -185,21 +203,27 @@ def test_containment_operator_differential(spark, corpus):
 
 
 def test_containment_winnowed_differential(spark, corpus):
-    """winnow_w shrinks the df/anchor exchange ~4.5x but must emit the
-    IDENTICAL pair set (deterministic interior-anchor guarantee,
-    hashing.winnow_split): differential vs the O(n^2) oracle on the synth
-    corpus (min 200 tokens >> winnow_w + k + 1)."""
+    """Winnowing at w=3 (the gated containment_pairs_winnowed window) halves
+    the df/anchor exchange but must emit the IDENTICAL pair set
+    (deterministic interior-anchor guarantee, hashing.winnow_split):
+    differential vs the O(n^2) oracle on the synth corpus (min 200 tokens
+    >> winnow_w + k + 1)."""
     pages, _, _ = corpus
-    docs = compute_docs(pages, CFG).select("id", "text").cache()
+    cfg_w = DedupConfig(
+        hot_band_threshold=100, hot_band_salt=4, containment_winnow_w=3
+    )
+    docs = compute_docs(pages, cfg_w).cache()
     got = {
         (r["inner_id"], r["outer_id"])
         for r in containment_pairs(
-            docs, "id", "text", CFG.k_shingle, winnow_w=8
+            docs, "id", "text", shingle_col="shingle_hashes", **WINNOW_COLS
         ).collect()
     }
     expect = {
         (r["inner_id"], r["outer_id"])
-        for r in containment_pairs_bruteforce(docs, "id", "text").collect()
+        for r in containment_pairs_bruteforce(
+            docs.select("id", "text"), "id", "text"
+        ).collect()
     }
     assert len(expect) > 0
     assert got == expect
@@ -218,13 +242,7 @@ def test_containment_winnowed_via_pipeline_columns(spark, corpus):
     got = {
         (r["inner_id"], r["outer_id"])
         for r in containment_pairs(
-            docs,
-            "id",
-            "text",
-            cfg_w.k_shingle,
-            shingle_col="shingle_hashes",
-            winnow_interior_col="win_interior",
-            winnow_boundary_col="win_boundary",
+            docs, "id", "text", shingle_col="shingle_hashes", **WINNOW_COLS
         ).collect()
     }
     expect = {
@@ -245,12 +263,26 @@ def test_containment_winnowed_midtoken_boundary(spark):
     outer = " ".join(words)
     inner = outer[2:-2]  # cut mid-token at BOTH ends
     rows = [(1, inner), (2, outer), (3, inner)]
-    docs = spark.createDataFrame(rows, "id long, text string")
+    docs = _signed(spark.createDataFrame(rows, "id long, text string"), 5)
     got = {
         (r["inner_id"], r["outer_id"])
-        for r in containment_pairs(docs, "id", "text", 5, winnow_w=5).collect()
+        for r in containment_pairs(
+            docs, "id", "text", shingle_col="shingle_hashes", **WINNOW_COLS
+        ).collect()
     }
     assert (1, 2) in got and (3, 2) in got
+
+
+def test_containment_needs_both_winnow_columns(spark):
+    """One winnow column without the other raises instead of silently
+    falling back to the full shingle set."""
+    docs = _signed(spark.createDataFrame([(1, "a b c d e f")], "id long, text string"))
+    with pytest.raises(ValueError, match="winnow"):
+        containment_pairs(
+            docs,
+            shingle_col="shingle_hashes",
+            winnow_boundary_col="win_boundary",
+        )
 
 
 def test_containment_boundary_anchor_not_missed(spark):
@@ -269,10 +301,12 @@ def test_containment_boundary_anchor_not_missed(spark):
         (3, inner),      # exact copy: boundary shingles now df>=2 but the
                          # copy is not a valid outer (equal length)
     ]
-    docs = spark.createDataFrame(rows, "id long, text string")
+    docs = _signed(spark.createDataFrame(rows, "id long, text string"))
     got = {
         (r["inner_id"], r["outer_id"])
-        for r in containment_pairs(docs, "id", "text", 5).collect()
+        for r in containment_pairs(
+            docs, "id", "text", shingle_col="shingle_hashes"
+        ).collect()
     }
     assert (1, 2) in got and (3, 2) in got
 
@@ -379,16 +413,22 @@ def test_containment_shuffle_anchor_branch_differential(spark, corpus):
     set as the default broadcast branch — otherwise the scale fallback is
     dead code that fails only at 10^9 docs (VERDICT r4 "What's wrong" #2)."""
     pages, _, _ = corpus
-    docs = compute_docs(pages, CFG).select("id", "text").cache()
+    docs = compute_docs(pages, CFG).select("id", "text", "shingle_hashes").cache()
     got = {
         (r["inner_id"], r["outer_id"])
         for r in containment_pairs(
-            docs, "id", "text", CFG.k_shingle, broadcast_anchors=False
+            docs,
+            "id",
+            "text",
+            shingle_col="shingle_hashes",
+            broadcast_anchors=False,
         ).collect()
     }
     expect = {
         (r["inner_id"], r["outer_id"])
-        for r in containment_pairs(docs, "id", "text", CFG.k_shingle).collect()
+        for r in containment_pairs(
+            docs, "id", "text", shingle_col="shingle_hashes"
+        ).collect()
     }
     assert len(expect) > 0
     assert got == expect

@@ -142,13 +142,13 @@ class TestStreamingNearDedup:
         assert len(got) == len(got_pairs), "a pair was emitted more than once"
 
         static = spark.createDataFrame(_corpus(rows), schema=PAGES_SCHEMA)
-        from intraarchivededuplicator_spark.functions.udfs import make_simhash_udf
+        from intraarchivededuplicator_spark.functions.udfs import simhash64_udf
         from intraarchivededuplicator_spark.functions.hashing import BAD_SIMHASHES
 
         docs = static.select(
             "url",
             F.col("warc_ts").cast("long").alias("ts_sec"),
-            make_simhash_udf(3)(F.col("text")).alias("sig"),
+            simhash64_udf(F.col("text")).alias("sig"),
         )
         want = near_pairs_within_horizon(
             docs, "url", "sig", "ts_sec", radius=4,

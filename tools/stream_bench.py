@@ -92,13 +92,13 @@ def main() -> None:
     n_pairs = got.count()
 
     # batch twin on the identical corpus (same sig kernel, same horizon gate)
-    from intraarchivededuplicator_spark.functions.udfs import make_simhash_udf
+    from intraarchivededuplicator_spark.functions.udfs import simhash64_udf
 
     t1 = time.time()
     docs = spark.read.parquet(corpus).select(
         "url",
         F.col("warc_ts").cast("long").alias("ts_sec"),
-        make_simhash_udf(3)(F.col("text")).alias("sig"),
+        simhash64_udf(F.col("text")).alias("sig"),
     )
     from intraarchivededuplicator_spark.functions.hashing import BAD_SIMHASHES
     from intraarchivededuplicator_spark.streaming.near_dedup_stream import duration_ms
