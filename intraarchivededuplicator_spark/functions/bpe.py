@@ -47,14 +47,6 @@ MERGES: list[tuple[str, str]] = [
 # untouched), and n_subwords = count(SEP) = len(split) - 1.
 
 
-def bpe_encode_py(token: str) -> list[str]:
-    """Pure-Python reference encoder (tests + documentation of semantics)."""
-    s = "".join(c + SEP for c in token)
-    for a, b in MERGES:
-        s = s.replace(a + SEP + b, a + b)
-    return s.split(SEP)[:-1]
-
-
 def bpe_encode_col(token: Column) -> Column:
     """Column: SEP-terminated BPE symbol string (JVM-side, codegen)."""
     s = F.regexp_replace(token, "(.)", "$1" + SEP)

@@ -163,7 +163,7 @@ def shingles(tokens: list[str], k: int) -> list[str]:
 SIMHASH_SHINGLE_K = 3  # SimHash feature = 3-token shingle (see note below)
 
 
-def simhash64(text: str, shingle_k: int = SIMHASH_SHINGLE_K) -> int:
+def simhash64(text: str) -> int:
     """64-bit SimHash over k-token shingles, weighted by occurrence count.
 
     bit j = 1  iff  sum_s count(s) * (+1 if bit j of token_hash64(s) else -1) > 0
@@ -175,9 +175,10 @@ def simhash64(text: str, shingle_k: int = SIMHASH_SHINGLE_K) -> int:
     matching the pHash-like "distance <= 4 means same item" contract the
     reference relies on (/root/reference/deduplicator/ProcessArchive.py:19).
 
-    Fewer than shingle_k tokens -> 0 (degenerate, see BAD_SIMHASHES). Signed.
+    Fewer than SIMHASH_SHINGLE_K tokens -> 0 (degenerate, see
+    BAD_SIMHASHES). Signed.
     """
-    sh = shingles(tokenize(text), shingle_k)
+    sh = shingles(tokenize(text), SIMHASH_SHINGLE_K)
     if not sh:
         return 0
     counts: dict[str, int] = {}
@@ -231,7 +232,7 @@ def minhash_sig(text: str, k_shingle: int, params: MinHashParams) -> list[int] |
     return [int(x) for x in vals.min(axis=1)]
 
 
-def simhash64_batch(texts, shingle_k: int = SIMHASH_SHINGLE_K) -> np.ndarray:
+def simhash64_batch(texts) -> np.ndarray:
     """Vectorized batch SimHash with a per-batch feature-hash memo.
 
     Used by the pandas UDF; matches simhash64() exactly. md5 per *unique*
@@ -248,7 +249,9 @@ def simhash64_batch(texts, shingle_k: int = SIMHASH_SHINGLE_K) -> np.ndarray:
     out = np.zeros(len(texts), dtype=np.int64)
     weights = (1 << np.arange(63, dtype=np.uint64)).astype(np.uint64)
     for i, text in enumerate(texts):
-        feats = shingles(tokenize(text), shingle_k) if isinstance(text, str) else []
+        feats = (
+            shingles(tokenize(text), SIMHASH_SHINGLE_K) if isinstance(text, str) else []
+        )
         if not feats:
             out[i] = 0
             continue
@@ -362,12 +365,11 @@ def signatures_batch(
     texts,
     k_shingle: int,
     params: MinHashParams,
-    shingle_k_sim: int = SIMHASH_SHINGLE_K,
     winnow_w: int | None = None,
 ):
     """All three signatures in one pass: (simhash int64 array, minhash lists,
     shingle-hash-set lists). Minhash/shingle-set are None for docs with fewer
-    than k_shingle tokens; simhash is 0 below shingle_k_sim tokens
+    than k_shingle tokens; simhash is 0 below SIMHASH_SHINGLE_K tokens
     (BAD_SIMHASHES degenerate convention, same as simhash64).
 
     With winnow_w set, returns two extra lists (win_interior, win_boundary):
@@ -417,8 +419,8 @@ def signatures_batch(
         toks = tok_lists[i]
         n = len(toks)
         th = all_th[offs[i]:offs[i + 1]]
-        if n >= shingle_k_sim:
-            feats = _shingle_mix(th, shingle_k_sim)
+        if n >= SIMHASH_SHINGLE_K:
+            feats = _shingle_mix(th, SIMHASH_SHINGLE_K)
             uniq, counts = np.unique(feats, return_counts=True)
             bits = ((uniq[:, None] >> bit_idx) & np.uint64(1)).astype(np.int64)
             acc = 2 * (counts.astype(np.int64) @ bits) - counts.sum()

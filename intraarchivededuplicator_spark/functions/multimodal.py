@@ -603,7 +603,6 @@ def media_near_dup_pairs_ivf(
     threshold: float = 0.98,
     n_cells: int = 16,
     nprobe: int = 4,
-    quantizer: str = "sampled",
 ) -> DataFrame:
     """(id_lo, id_hi, cosine): near-dup media routed through the IVF-flat
     candidate generator instead of hyperplane LSH — the same decoded-feature
@@ -632,5 +631,4 @@ def media_near_dup_pairs_ivf(
         vec_col="features",
         n_cells=n_cells,
         nprobe=nprobe,
-        quantizer=quantizer,
     )

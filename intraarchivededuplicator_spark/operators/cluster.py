@@ -86,6 +86,10 @@ def _small_star(e: DataFrame) -> DataFrame:
 # star loop engages unchanged.
 SMALL_GRAPH_CAP = 1_000_000
 
+# Round cap for the star loop. It converges in O(log^2 n) rounds worst case
+# (~10 measured at 160k docs), so 50 is a safety stop, never the exit.
+MAX_ITERATIONS = 50
+
 
 def _driver_union_find(spark, e: DataFrame) -> DataFrame:
     """(a, b) edges -> (id, cluster_id) via driver-side union-find.
@@ -138,8 +142,6 @@ def connected_components(
     edges: DataFrame,
     src: str = "id_lo",
     dst: str = "id_hi",
-    max_iterations: int = 50,
-    checkpoint: bool = True,
     small_graph_cap: int | None = SMALL_GRAPH_CAP,
 ) -> DataFrame:
     """edges (src, dst) -> (id, cluster_id) for every id appearing in edges.
@@ -159,9 +161,8 @@ def connected_components(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .filter(F.col("a") != F.col("b"))
         .distinct()
+        .localCheckpoint()
     )
-    if checkpoint:
-        e = e.localCheckpoint()
     prev = _checksum(e)
     if prev[0] == 0:
         return empty_frame(spark, "id long, cluster_id long")
@@ -178,11 +179,9 @@ def connected_components(
     loop_parts = max(8, min(int(saved_parts), prev[0] // 50_000 + 1))
     conf.set("spark.sql.shuffle.partitions", str(loop_parts))
     try:
-        for rnd in range(max_iterations):
-            e = _large_star(e)
-            e = _small_star(e)
-            if checkpoint:
-                e = e.localCheckpoint()
+        for rnd in range(MAX_ITERATIONS):
+            # checkpoint every round: lineage would otherwise grow per round
+            e = _small_star(_large_star(e)).localCheckpoint()
             # convergence check every other round: a fixpoint round is
             # idempotent, so a late stop is harmless and this halves the
             # driver collect barriers (VERDICT r1 next-round #1b)

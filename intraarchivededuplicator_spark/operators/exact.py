@@ -1,10 +1,8 @@
 """Exact-duplicate operators (content-hash equality family).
 
-Covers the reference's J1/J2/J3 query family:
-- getByHash            /root/reference/dbApi.py:498-501
-- getOtherHashes       /root/reference/dbApi.py:503-507  (minus own container)
-- getDuplicateImages   /root/reference/dbApi.py:444-459  (GROUP BY ... HAVING
-  COUNT(*) > 1 + semi-join back to rows)
+Covers the reference's J3 query (getDuplicateImages, GROUP BY ... HAVING
+COUNT(*) > 1; /root/reference/dbApi.py:444-459) and the exact-dup leg of the
+pairs table. The J1 lookup is plans/queries.q_exact_hash_rows's own semi-join.
 
 The exact key here is md5 over the extracted text (built-in F.md5, JVM-side),
 replacing MD5-of-bytes (/root/reference/scanner/hashFile.py:138-140).
@@ -33,14 +31,6 @@ def duplicate_hash_groups(
     )
 
 
-def rows_in_duplicate_groups(
-    df: DataFrame, hash_col: str = "text_hash", min_count: int = 2
-) -> DataFrame:
-    """All rows whose hash appears >= min_count times — J3's semi-join shape."""
-    groups = duplicate_hash_groups(df, hash_col, min_count).select(hash_col)
-    return df.join(groups, hash_col, "left_semi")
-
-
 def exact_pairs(
     df: DataFrame, id_col: str = "id", hash_col: str = "text_hash"
 ) -> DataFrame:
@@ -56,20 +46,3 @@ def exact_pairs(
         .select(*canonical_pair("_la", "_lb"), F.lit(0).alias("distance"))
     )
 
-
-def lookup_by_hash(
-    corpus: DataFrame,
-    hashes: DataFrame,
-    hash_col: str = "text_hash",
-    exclude_site: str | None = None,
-    query_site_col: str = "site",
-) -> DataFrame:
-    """J1/J2: rows matching any probe hash, optionally excluding the probe's
-    own container/site (SO4 self-exclusion,
-    /root/reference/dbApi.py:503-507)."""
-    probes = F.broadcast(hashes.select(hash_col, *( [query_site_col] if exclude_site else [] )).dropDuplicates())
-    if exclude_site:
-        probes = probes.withColumnRenamed(query_site_col, "_q_site")
-        out = corpus.join(probes, hash_col)
-        return out.filter(F.col(exclude_site) != F.col("_q_site")).drop("_q_site")
-    return corpus.join(probes, hash_col, "left_semi")

@@ -15,9 +15,7 @@ Spark realization — zero Python in the hot path, three slim exchanges:
    (md5(vec_id), vec_id) — a distributed TakeOrdered top-k, engine-portable
    (the DuckDB oracle recomputes the identical sample; same device as
    plans/queries.q_deterministic_sample). Sampled centroids are a legitimate
-   IVF quantizer; kmeans_centroids below is the Lloyd-refined production
-   swap-in via the same (cell_id, cvec) contract — every downstream stage
-   is unchanged (pass quantizer="kmeans" to either query shape).
+   IVF quantizer, and the one every gated query replays.
 2. assignment: broadcast the centroid table (n_cells x dim ints — KB-sized
    driver state, exactly what a cluster would broadcast) and compute the
    exact integer-scaled cosine of every (vector, centroid) pair in one
@@ -68,94 +66,14 @@ def _sample_centroids(vecs: DataFrame, n_cells: int) -> list[tuple[int, list[int
     a distributed TakeOrdered (no global sort); the result is the
     coarse-quantizer state every IVF build materializes driver-side and
     broadcasts (KBs: n_cells x dim x 8B). The ONE sampling implementation:
-    _ivf_candidates (the engine) and centroid_rows (the test surface) both
-    call this, so they cannot drift."""
+    _ivf_candidates and ivf_cell_stats both call this, so they cannot
+    drift."""
     rows = (
         vecs.orderBy(F.md5(F.col("_id").cast("string")).asc(), F.col("_id").asc())
         .limit(n_cells)
         .collect()
     )
     return [(i, list(r["_v"])) for i, r in enumerate(rows)]
-
-
-def centroid_rows(
-    emb: DataFrame, id_col: str, vec_col: str, n_cells: int
-) -> list[tuple[int, list[int]]]:
-    """Public quantizer-build entry over a raw embeddings frame; see
-    _sample_centroids (shared with the engine's _ivf_candidates)."""
-    return _sample_centroids(_scaled_vecs(emb, id_col, vec_col), n_cells)
-
-
-def kmeans_centroids(
-    vecs: DataFrame, n_cells: int, n_iter: int = 3
-) -> list[tuple[int, list[int]]]:
-    """Lloyd-refined coarse quantizer in the same (cell_id, cvec) contract
-    as _sample_centroids — the documented production swap-in: every
-    downstream stage (assignment, probe join, re-rank, hot_cap) is unchanged.
-
-    Spherical k-means in the INT_SCALE fixed-point space: seeding is the
-    deterministic md5 sample (so kmeans_centroids(n_iter=0) IS the sampled
-    quantizer), assignment uses the same exact integer-scaled cosine as the
-    query-time quantizer, and each new centroid is the per-dimension mean of
-    its members ROUNDED BACK to int64 scale — so query-time assignment stays
-    exact integer arithmetic and the refined quantizer is deterministic
-    across executors/runs/partitionings. Empty cells keep their previous
-    centroid (cell count never collapses). Cost per iteration: one map-only
-    broadcast assignment + one groupBy(cell) mean over dim agg columns (no
-    explode; map-side partial aggregation) — at 10^12 rows run it on the
-    same ~sqrt(n)-cell sample a production IVF build trains on, not the
-    full table.
-
-    No SQL oracle: the iterative refinement is not expressible in one DuckDB
-    query, so kmeans-quantized plans are pytest-pinned (differential vs the
-    sampled quantizer's contract + recall measurement) rather than
-    driver-gated; gated queries keep quantizer="sampled".
-    """
-    cents = _sample_centroids(vecs, n_cells)
-    if not cents or n_iter <= 0:
-        return cents
-    spark = vecs.sparkSession
-    dim = len(cents[0][1])
-    for _ in range(n_iter):
-        cents_df = spark.createDataFrame(
-            cents, "cell_id int, cvec array<bigint>"
-        )
-        ccos = rcos6(F.col("_v"), F.col("cvec"))
-        # argmax cell per vector: max(struct) keeps the best (ccos, then
-        # LOWEST cell_id on ties) without a window sort
-        best = (
-            vecs.join(F.broadcast(cents_df))
-            .select(
-                "_id",
-                "_v",
-                F.struct(
-                    ccos.alias("c"), (-F.col("cell_id")).alias("nc")
-                ).alias("_s"),
-            )
-            .groupBy("_id", "_v")
-            .agg(F.max("_s").alias("_s"))
-            .select((-F.col("_s.nc")).cast("int").alias("cell_id"), "_v")
-        )
-        # Exact long SUM / COUNT, not F.avg: avg(bigint) accumulates in a
-        # double, which is order-dependent (partitioning-dependent) once a
-        # cell's per-dimension sum passes 2^53 — breaking the determinism
-        # guarantee above. sum(bigint) is exact int64 (order-free); one
-        # double division of two exact values is then deterministic. Bound:
-        # |component| ~ INT_SCALE*|x| <~ 2^27, so int64 sum overflow needs
-        # > 2^36 members in one cell — unreachable for any sane n_cells.
-        cnt = F.count(F.lit(1))
-        mean_cols = [
-            F.round(F.sum(F.col("_v")[i]) / cnt).cast("long").alias(f"_m{i}")
-            for i in range(dim)
-        ]
-        new_rows = best.groupBy("cell_id").agg(*mean_cols).collect()
-        by_cell = {
-            r["cell_id"]: [r[f"_m{i}"] for i in range(dim)] for r in new_rows
-        }
-        cents = [
-            (cid, by_cell.get(cid, cvec)) for cid, cvec in cents
-        ]
-    return cents
 
 
 def _ivf_candidates(
@@ -165,25 +83,18 @@ def _ivf_candidates(
     n_cells: int,
     nprobe: int,
     hot_cap: int | None,
-    quantizer: str = "sampled",
-    kmeans_iter: int = 3,
 ) -> tuple[DataFrame, DataFrame]:
     """(vecs, cand): the checkpointed scaled-vector table ("_id", "_v") and the
     directed probe candidates (qid, nid) — the shared front half of both IVF
-    query shapes. quantizer: "sampled" (md5 sample; the oracle-gated
-    default) or "kmeans" (Lloyd-refined, see kmeans_centroids)."""
+    query shapes."""
     spark: SparkSession = emb.sparkSession
     vecs = _scaled_vecs(emb, id_col, vec_col).localCheckpoint()
 
     # the quantizer build and the main job both read the checkpointed
     # vectors instead of re-scanning the source
-    if quantizer == "kmeans":
-        rows = kmeans_centroids(vecs, n_cells, kmeans_iter)
-    elif quantizer == "sampled":
-        rows = _sample_centroids(vecs, n_cells)
-    else:
-        raise ValueError(f"unknown quantizer {quantizer!r}")
-    cents = spark.createDataFrame(rows, "cell_id int, cvec array<bigint>")
+    cents = spark.createDataFrame(
+        _sample_centroids(vecs, n_cells), "cell_id int, cvec array<bigint>"
+    )
     # map-only quantization: n x n_cells slim rows out, vectors stay put
     ccos = rcos6(F.col("_v"), F.col("cvec"))
     assign = (
@@ -227,8 +138,6 @@ def ivf_topk(
     n_cells: int = 16,
     nprobe: int = 4,
     hot_cap: int | None = None,
-    quantizer: str = "sampled",
-    kmeans_iter: int = 3,
 ) -> DataFrame:
     """(id, neighbor_id, rank, cosine): IVF-routed approximate top-k.
 
@@ -236,9 +145,7 @@ def ivf_topk(
     returned cosine is exact. Columns match the brute-force twin
     (plans/queries.q_embedding_knn) so recall is directly measurable.
     """
-    vecs, cand = _ivf_candidates(
-        emb, id_col, vec_col, n_cells, nprobe, hot_cap, quantizer, kmeans_iter
-    )
+    vecs, cand = _ivf_candidates(emb, id_col, vec_col, n_cells, nprobe, hot_cap)
     q = vecs.select(F.col("_id").alias("qid"), F.col("_v").alias("qv"))
     n = vecs.select(F.col("_id").alias("nid"), F.col("_v").alias("nv"))
     scored = (
@@ -272,8 +179,6 @@ def ivf_near_pairs(
     n_cells: int = 16,
     nprobe: int = 4,
     hot_cap: int | None = None,
-    quantizer: str = "sampled",
-    kmeans_iter: int = 3,
 ) -> DataFrame:
     """(id_lo, id_hi, cosine) with cosine >= threshold — the IVF-routed twin
     of ann.ann_near_pairs. A pair is a candidate when EITHER side probes the
@@ -281,9 +186,7 @@ def ivf_near_pairs(
     same-cell pairs are never missed); directed candidates canonicalize to
     undirected pairs before the exact re-rank, so each pair pays one cosine.
     Precision is exact; recall is governed by (n_cells, nprobe)."""
-    vecs, cand = _ivf_candidates(
-        emb, id_col, vec_col, n_cells, nprobe, hot_cap, quantizer, kmeans_iter
-    )
+    vecs, cand = _ivf_candidates(emb, id_col, vec_col, n_cells, nprobe, hot_cap)
     pairs = cand.select(
         F.least("qid", "nid").alias("id_lo"),
         F.greatest("qid", "nid").alias("id_hi"),

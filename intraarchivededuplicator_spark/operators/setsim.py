@@ -42,23 +42,16 @@ from pyspark.sql.types import ArrayType, StringType
 
 from ..session import empty_frame
 
-# Adaptive-strategy gates (jaccard_self_join(strategy="auto")). The dense
-# branch engages only when BOTH hold, so its broadcast side is bounded by
-# construction (<= DENSE_DOCS_MAX rows x (DENSE_UNIVERSE_MAX/64 + 2) longs,
-# ~5 MB at the defaults) and its all-pairs volume by DENSE_DOCS_MAX^2/2.
+# Branch gates. The dense branch engages only when BOTH hold, so its
+# broadcast side is bounded by construction (<= DENSE_DOCS_MAX rows x
+# (DENSE_UNIVERSE_MAX/64 + 2) longs, ~5 MB) and its all-pairs volume by
+# DENSE_DOCS_MAX^2/2.
 DENSE_UNIVERSE_MAX = 2048
 DENSE_DOCS_MAX = 20_000
 
 
 def jaccard_self_join(
-    docs: DataFrame,
-    id_col: str,
-    grams_col: str,
-    threshold: float,
-    *,
-    strategy: str = "auto",
-    dense_universe_max: int = DENSE_UNIVERSE_MAX,
-    dense_docs_max: int = DENSE_DOCS_MAX,
+    docs: DataFrame, id_col: str, grams_col: str, threshold: float
 ) -> DataFrame:
     """(id_lo, id_hi, n_shared, jaccard) for all pairs with Jaccard >= t.
 
@@ -66,13 +59,13 @@ def jaccard_self_join(
     on int64 beats dedup on strings) or already-distinct hashed longs.
     Exact: verified against the naive all-pairs oracle in tests.
 
-    Two physical strategies, picked at runtime (AQE-style: one cheap
-    statistics job over the checkpointed slim projection decides the plan):
+    Two physical plans, picked at runtime from the input (AQE-style: one
+    cheap statistics job over the checkpointed slim projection decides):
 
-    * ``prefix`` — AllPairs/PPJoin prefix filtering (below). The scale path:
+    * prefix — AllPairs/PPJoin prefix filtering (below). The scale path:
       candidate volume tracks true-pair density, never the gram skew.
-    * ``dense`` — when the DISTINCT-GRAM UNIVERSE is tiny (<=
-      ``dense_universe_max``) every doc's gram set packs into a fixed
+    * dense — when the DISTINCT-GRAM UNIVERSE is tiny (<=
+      DENSE_UNIVERSE_MAX) every doc's gram set packs into a fixed
       ceil(u/64)-long bitmap, and exact Jaccard for a pair is a handful of
       codegen'd AND+popcounts with NO shuffle, NO window rank and NO verify
       join. In this regime prefix filtering is the WRONG plan measured, not
@@ -83,8 +76,8 @@ def jaccard_self_join(
       Jaccard is inherently Omega(n^2)-candidate for ANY algorithm (pair
       density is structural), so the right move is the lowest-constant
       quadratic: bitmaps, length filter inside the join condition, and a
-      broadcast of the <= ``dense_docs_max``-row bitmap table. Above either
-      gate, auto falls back to prefix.
+      broadcast of the <= DENSE_DOCS_MAX-row bitmap table. Above either
+      gate the prefix plan runs.
 
     The hashed (id, grams) projection is locally checkpointed: both
     branches read it 2-3 times (probe/dict/bitmaps, or explode + the two
@@ -93,8 +86,6 @@ def jaccard_self_join(
     exchange of the exploded table, disk-backed at scale, and its blocks
     are freed with the result instead of staying in the session's cache.
     """
-    if strategy not in ("auto", "prefix", "dense"):
-        raise ValueError(f"unknown strategy {strategy!r}")
     g = F.col(grams_col)
     if isinstance(docs.schema[grams_col].dataType, ArrayType) and isinstance(
         docs.schema[grams_col].dataType.elementType, StringType
@@ -103,32 +94,23 @@ def jaccard_self_join(
     d = docs.select(F.col(id_col).alias("_id"), g.alias("_g")).filter(
         F.size("_g") > 0
     ).localCheckpoint()
-    if strategy == "dense":
-        dense = _dense_join(d, threshold, dense_universe_max)
-        if dense is None:
-            raise ValueError(
-                f"strategy='dense' needs a gram universe of at most "
-                f"dense_universe_max={dense_universe_max} distinct grams"
-            )
-        return dense
-    if strategy == "auto":
-        # one HLL pass decides; approx_count_distinct (rsd 5%) costs a
-        # partial-aggregate scan of the cache, never a wide exchange. The
-        # 0.8 margin absorbs HLL error; _dense_join re-counts exactly while
-        # building the dictionary it needs anyway and falls back if the
-        # sketch flattered the universe.
-        stats = (
-            d.select("_id", F.explode("_g").alias("gram"))
-            .agg(
-                F.approx_count_distinct("gram").alias("u"),
-                F.approx_count_distinct("_id").alias("nd"),
-            )
-            .collect()[0]
+    # one HLL pass decides; approx_count_distinct (rsd 5%) costs a
+    # partial-aggregate scan of the cache, never a wide exchange. The 0.8
+    # margin absorbs HLL error; _dense_join re-counts exactly while building
+    # the dictionary it needs anyway and falls back if the sketch flattered
+    # the universe.
+    stats = (
+        d.select("_id", F.explode("_g").alias("gram"))
+        .agg(
+            F.approx_count_distinct("gram").alias("u"),
+            F.approx_count_distinct("_id").alias("nd"),
         )
-        if stats["nd"] <= dense_docs_max and stats["u"] <= dense_universe_max * 0.8:
-            dense = _dense_join(d, threshold, dense_universe_max)
-            if dense is not None:
-                return dense
+        .collect()[0]
+    )
+    if stats["nd"] <= DENSE_DOCS_MAX and stats["u"] <= DENSE_UNIVERSE_MAX * 0.8:
+        dense = _dense_join(d, threshold, DENSE_UNIVERSE_MAX)
+        if dense is not None:
+            return dense
     return _prefix_join(d, threshold)
 
 
@@ -136,9 +118,9 @@ def _dense_join(
     d: DataFrame, threshold: float, universe_max: int
 ) -> DataFrame | None:
     """Bitmap all-pairs for tiny gram universes. Returns None when the exact
-    dictionary count exceeds ``universe_max`` (an auto-mode HLL overshoot,
-    or a forced dense strategy over too large a universe); the dictionary
-    collect stops at ``universe_max + 1`` grams either way."""
+    dictionary count exceeds ``universe_max`` (an HLL overshoot in
+    jaccard_self_join's gate); the dictionary collect stops at
+    ``universe_max + 1`` grams either way, so the driver never holds more."""
     dict_df = d.select(F.explode("_g").alias("gram")).distinct()
     grams = sorted(r["gram"] for r in dict_df.limit(universe_max + 1).collect())
     u = len(grams)

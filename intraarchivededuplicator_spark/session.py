@@ -1,7 +1,8 @@
 """SparkSession factory with the engine's standard knobs.
 
-Local testing uses local[N]; at cluster scale the same conf applies (AQE,
-skew-join handling, Arrow batching). Nothing here is sandbox-specific.
+Local testing uses local[N]; at cluster scale the same conf applies (static
+planning, explicit broadcasts, Arrow batching). Nothing here is
+sandbox-specific.
 """
 
 from __future__ import annotations
@@ -20,15 +21,14 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
-    adaptive: bool = False,
 ) -> SparkSession:
-    """adaptive: AQE is OFF by default for this engine. Measured on the
-    flagship pairs plan (~40 exchanges, many independent query stages): AQE's
-    per-stage driver re-planning serialized the stage graph and cost 4x wall
-    (128s vs 33s warm at 160k docs, local[32]). The engine handles skew
-    explicitly (banded salting, hot-key caps, rarest-anchor selection), which
-    is what AQE's skew-join would otherwise cover; static planning is faster
-    AND deterministic. Pass adaptive=True for ad-hoc exploratory sessions.
+    """AQE is OFF for this engine. Measured on the flagship pairs plan (~40
+    exchanges, many independent query stages): AQE's per-stage driver
+    re-planning serialized the stage graph and cost 4x wall (128s vs 33s
+    warm at 160k docs, local[32]). The engine handles skew explicitly
+    (banded salting, hot-key caps, rarest-anchor selection), which is what
+    AQE's skew-join would otherwise cover; static planning is faster AND
+    deterministic.
 
     Generated-code cache: Spark keeps the Janino-compiled class of each
     whole-stage-codegen plan shape in a JVM-wide cache of
@@ -68,9 +68,7 @@ def get_spark(
     b = (
         SparkSession.builder.appName(app)
         .master(master)
-        .config("spark.sql.adaptive.enabled", str(adaptive).lower())
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config("spark.sql.adaptive.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))

@@ -267,6 +267,18 @@ class TestIvfTopK:
         }
         assert got == self._brute_force(df, k=3)
 
+    def test_full_probe_equals_exact_on_small_corpus(self, spark):
+        """The same degeneration on a 40-vector, 4-cell index: probing
+        every cell returns brute force's top-k neighbor sets."""
+        from intraarchivededuplicator_spark.operators.ivf import ivf_topk
+
+        df = spark.createDataFrame(_clustered_vectors()[:40])
+        got = {
+            (r["vec_id"], r["neighbor_id"])
+            for r in ivf_topk(df, k=3, n_cells=4, nprobe=4).collect()
+        }
+        assert got == self._brute_force(df, k=3)
+
     def test_recall_vs_brute_force_with_pruning(self, spark):
         from intraarchivededuplicator_spark.operators.ivf import ivf_topk
 
@@ -398,14 +410,15 @@ class TestIvfTopK:
 
         from intraarchivededuplicator_spark.operators.ann import INT_SCALE
         from intraarchivededuplicator_spark.operators.ivf import (
-            centroid_rows,
+            _sample_centroids,
+            _scaled_vecs,
             ivf_topk,
         )
 
         rows = _clustered_vectors()
         df = spark.createDataFrame(rows)
         n_cells, cap = 4, 10
-        cents = centroid_rows(df, "vec_id", "embedding", n_cells)
+        cents = _sample_centroids(_scaled_vecs(df, "vec_id", "embedding"), n_cells)
         scaled = {
             r.vec_id: np.copysign(
                 np.floor(np.abs(np.array(r.embedding, dtype=np.float64)) * INT_SCALE + 0.5),
@@ -866,18 +879,9 @@ class TestMultimodal:
             (p["id_lo"], p["id_hi"])
             for p in media_near_dup_pairs_ivf(dec, threshold=0.98).collect()
         }
+        dec.unpersist()
         assert lsh == planted
         assert ivf == planted
-        # the IVF route also holds under the Lloyd-refined quantizer — the
-        # (cell_id, cvec) swap-in contract leaves exactness untouched
-        km = {
-            (p["id_lo"], p["id_hi"])
-            for p in media_near_dup_pairs_ivf(
-                dec, threshold=0.98, quantizer="kmeans"
-            ).collect()
-        }
-        dec.unpersist()
-        assert km == planted
 
 
 class TestStreamingMediaDecode:
@@ -1100,73 +1104,6 @@ class TestBatchSignatureKernel:
             bits = (planes @ xi) >= 0
             want = np.int64(np.uint64((bits.astype(np.uint64) * weights).sum()))
             assert got[vid] == want, vid
-
-
-class TestKmeansQuantizer:
-    def test_zero_iter_is_the_sampled_quantizer(self, spark):
-        from intraarchivededuplicator_spark.operators.ivf import (
-            _scaled_vecs,
-            _sample_centroids,
-            kmeans_centroids,
-        )
-
-        df = spark.createDataFrame(_clustered_vectors())
-        vecs = _scaled_vecs(df, "vec_id", "embedding")
-        assert kmeans_centroids(vecs, 4, n_iter=0) == _sample_centroids(vecs, 4)
-
-    def test_deterministic_across_partitionings(self, spark):
-        from intraarchivededuplicator_spark.operators.ivf import (
-            _scaled_vecs,
-            kmeans_centroids,
-        )
-
-        df = spark.createDataFrame(_clustered_vectors())
-        a = kmeans_centroids(_scaled_vecs(df, "vec_id", "embedding"), 6, 3)
-        b = kmeans_centroids(
-            _scaled_vecs(df.repartition(7), "vec_id", "embedding"), 6, 3
-        )
-        assert a == b
-
-    def test_full_probe_equals_exact_regardless_of_quantizer(self, spark):
-        """nprobe == n_cells must degenerate to exhaustive search whatever
-        the quantizer — the downstream-contract check for the swap-in."""
-        from intraarchivededuplicator_spark.operators.ivf import ivf_topk
-
-        df = spark.createDataFrame(_clustered_vectors()[:40])
-        kw = dict(k=3, n_cells=4, nprobe=4)
-        got = sorted(
-            map(tuple, ivf_topk(df, quantizer="kmeans", kmeans_iter=2, **kw).collect())
-        )
-        want = sorted(map(tuple, ivf_topk(df, **kw).collect()))
-        assert got == want
-
-    def test_refined_quantizer_recall_not_worse_on_clustered_data(self, spark):
-        """On cluster-structured vectors Lloyd refinement should recover at
-        least the sampled quantizer's near-pair recall at the same
-        (n_cells, nprobe) — the reason the swap-in exists."""
-        from intraarchivededuplicator_spark.operators.ivf import ivf_near_pairs
-
-        df = spark.createDataFrame(_clustered_vectors())
-        t = 0.9
-        exact = {
-            (r["id_lo"], r["id_hi"])
-            for r in ivf_near_pairs(df, threshold=t, n_cells=8, nprobe=8).collect()
-        }
-        assert exact
-        kw = dict(threshold=t, n_cells=8, nprobe=2)
-        sampled = {
-            (r["id_lo"], r["id_hi"]) for r in ivf_near_pairs(df, **kw).collect()
-        }
-        kmeans = {
-            (r["id_lo"], r["id_hi"])
-            for r in ivf_near_pairs(
-                df, quantizer="kmeans", kmeans_iter=3, **kw
-            ).collect()
-        }
-        r_sampled = len(sampled & exact) / len(exact)
-        r_kmeans = len(kmeans & exact) / len(exact)
-        assert r_kmeans >= r_sampled
-        assert r_kmeans >= 0.9
 
 
 class TestAnnRecallAudit:

@@ -38,7 +38,7 @@ def test_two_components(spark):
 
 def test_path_graph_long_chain(spark):
     """200-node path: naive min-propagation needs ~200 rounds; the alternating
-    star algorithm must converge well inside max_iterations=50."""
+    star algorithm must converge well inside MAX_ITERATIONS=50."""
     n = 200
     e = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "id_lo long, id_hi long"

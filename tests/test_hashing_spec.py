@@ -339,8 +339,8 @@ class TestSignaturesBatchKernel:
             n = rng.randint(0, 120)
             texts.append(" ".join(vocab[j] for j in rng.randint(0, len(vocab), n)))
         p = MinHashParams.make(k=16, seed=3)
-        k_shingle, k_sim = 5, 3
-        sim, mh, sh = signatures_batch(texts, k_shingle, p, shingle_k_sim=k_sim)
+        k_shingle, k_sim = 5, 3  # k_sim: the SimHash shingle width
+        sim, mh, sh = signatures_batch(texts, k_shingle, p)
 
         a = np.array(p.a, dtype=np.int64)[:, None]
         b = np.array(p.b, dtype=np.int64)[:, None]
