@@ -1,9 +1,11 @@
 """Engine configuration.
 
 Defaults mirror the reference's production tuning and the golden fixture
-config from FIXTURES.md §4: k_shingle=5, minhash_k=128, radius=4. SimHash
-uses 5 bands of 13/13/13/13/12 bits, not the fixture's 8x8-bit layout (see
-bands_for_radius).
+config from FIXTURES.md §4: k_shingle=5, minhash_k=128, radius=4. The SimHash
+band count is derived from the radius (bands_for_radius): radius 4 -> 5 bands
+of 13/13/13/13/12 bits, not the fixture's 8x8-bit layout. Hot band keys are
+salted over banded_self_join's fixed 16 buckets, and the degenerate
+signatures functions/hashing.BAD_SIMHASHES never match.
 
 - radius defaults: dedup 2 / cross-similarity 4 / interactive 6
   (/root/reference/deduplicator/ProcessArchive.py:19, :746, :863)
@@ -16,7 +18,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from .functions.hashing import BAD_SIMHASHES, MinHashParams
+from .functions.hashing import MinHashParams
 
 
 def bands_for_radius(radius: int) -> int:
@@ -38,11 +40,9 @@ class DedupConfig:
     k_shingle: int = 5
     minhash_k: int = 128
     minhash_bands: int = 32  # 32 bands x 4 rows over the 128-sig
-    simhash_radius: int = 4
-    simhash_bands: int = 5  # 13/13/13/13/12-bit bands: full recall for r <= 4
+    simhash_radius: int = 4  # bands: bands_for_radius(simhash_radius)
     # skew handling (reference analogs cited in module docstring)
     hot_band_threshold: int = 500
-    hot_band_salt: int = 16
     # MinHash candidates entering the cluster graph must pass exact Jaccard
     # verification at this threshold (candidates alone are probabilistic)
     jaccard_verify_threshold: float = 0.7
@@ -55,7 +55,6 @@ class DedupConfig:
     # 10-token driver testdata docs); web-page corpora (>= ~200 tokens)
     # should set 8.
     containment_winnow_w: int | None = None
-    blacklist: tuple[int, ...] = BAD_SIMHASHES
 
     @property
     def minhash_params(self) -> MinHashParams:
@@ -63,11 +62,7 @@ class DedupConfig:
         return MinHashParams.make(self.minhash_k)
 
     def __post_init__(self):
-        if self.simhash_bands <= self.simhash_radius:
-            raise ValueError(
-                f"recall<1: need bands > radius (got {self.simhash_bands} bands, "
-                f"radius {self.simhash_radius})"
-            )
+        bands_for_radius(self.simhash_radius)  # raises outside 0..63
         if self.minhash_k % self.minhash_bands != 0:
             raise ValueError("minhash_bands must divide minhash_k")
 

@@ -8,8 +8,8 @@ stage writes:
   <root>/<stage>/_lineage.json   stage metadata + per-partition row counts
 
 Resume = if the sidecar exists and its config fingerprint matches, read the
-parquet instead of recomputing. With an Iceberg catalog the same contract
-maps to snapshot ids; parquet + sidecar is the sandbox fallback (SURVEY.md §7).
+parquet instead of recomputing. The fingerprint is the repr of the
+DedupConfig, so any change to its fields recomputes every stage.
 """
 
 from __future__ import annotations

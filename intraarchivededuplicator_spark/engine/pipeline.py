@@ -22,8 +22,9 @@ import hashlib as _hashlib
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
-from ..config import DEFAULT_CONFIG, DedupConfig
+from ..config import DEFAULT_CONFIG, DedupConfig, bands_for_radius
 from ..functions.columns import tokens
+from ..functions.hashing import BAD_SIMHASHES
 from ..functions.junk import is_junk_page
 from ..functions.textprep import with_extracted_text
 from ..functions.udfs import make_fast_signatures_udf
@@ -194,10 +195,8 @@ def build_pairs(
         "id",
         "simhash",
         cfg.simhash_radius,
-        n_bands=cfg.simhash_bands,
-        blacklist=cfg.blacklist,
+        blacklist=BAD_SIMHASHES,
         hot_threshold=cfg.hot_band_threshold,
-        salt=cfg.hot_band_salt,
         hot_keys=hot_keys,
     ).withColumn("kind", F.lit("simhash"))
     mh_cand = minhash_candidate_pairs(
@@ -367,7 +366,7 @@ def dedup_pipeline(
     hot_bands = hot_band_keys(
         explode_bands(
             docs.filter(F.col("simhash").isNotNull()), "id", "simhash",
-            cfg.simhash_bands,
+            bands_for_radius(cfg.simhash_radius),
         ),
         cfg.hot_band_threshold,
     )
@@ -375,11 +374,7 @@ def dedup_pipeline(
     pairs = ck.run(
         spark,
         "pairs",
-        lambda: build_pairs(
-            docs,
-            cfg,
-            hot_keys=hot_bands if cfg.hot_band_threshold is not None else None,
-        ).observe(
+        lambda: build_pairs(docs, cfg, hot_keys=hot_bands).observe(
             obs["pairs"],
             F.count(F.lit(1)).alias("n_pairs"),
             F.sum(F.when(F.col("kind") == "exact", 1).otherwise(0)).alias(

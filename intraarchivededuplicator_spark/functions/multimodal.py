@@ -587,14 +587,11 @@ def media_near_dup_pairs(
 ) -> DataFrame:
     """Near-dup media via hyperplane LSH over decoded features — the pHash
     radius-match analog (/root/reference/dbPhashApi.py:175-192) for media."""
-    from ..operators.ann import make_hyperplane_udf
+    from ..operators.ann import hyperplane_signed
     from ..operators.banded_join import banded_self_join
 
-    sig_udf = make_hyperplane_udf(FEATURE_DIM)
-    sigged = decoded.filter(F.col("features").isNotNull()).select(
-        F.col("media_id"),
-        sig_udf(F.col("features").cast("array<double>")).alias("sig"),
-    )
+    # features that are null or not FEATURE_DIM long never sign
+    sigged = hyperplane_signed(decoded, "features", FEATURE_DIM, "media_id")
     return banded_self_join(sigged, "media_id", "sig", hamming_radius, n_bands=n_bands)
 
 

@@ -1,16 +1,25 @@
-"""Approximate nearest neighbor over embedding columns — the scale path.
+"""Vector near-duplicates: one exact refinement behind three candidate routes.
 
-Brute-force cosine top-k (plans/queries.q_embedding_knn) is the exactness
-baseline but is O(n^2) — fine at sf0.1, impossible at 10^12 rows. The scale
-path reuses the engine's core trick: random-hyperplane LSH packs each vector
-into a 64-bit signature whose Hamming distance estimates angular distance
-(Charikar's SimHash for vectors), then the SAME banded Hamming self-join that
-powers text near-dup generates candidates, and exact cosine re-ranks them.
-One signature kernel, two modalities (text SimHash / vector hyperplane LSH) —
-the index is the shuffle layout, no driver-side state.
+A fuzzy-duplicate query has two halves: a cheap structure picks candidate
+pairs, then an exact check keeps, drops or ranks each one. The routes differ
+only in the first half:
 
-Candidate recall is probabilistic (not pigeonhole-exact like text SimHash at
-fixed radius): P[same band] = (1 - theta/pi)^bits_per_band per band. Tests
+- brute force (plans/queries.q_embedding_knn / q_embedding_near_pairs): the
+  O(n^2) cross join, the exactness baseline at small scale;
+- hyperplane LSH (this module, ann_topk / ann_near_pairs): random-hyperplane
+  signatures (Charikar's SimHash for vectors) through the SAME banded Hamming
+  self-join that powers text near-dup;
+- IVF (operators/ivf.py): inverted lists over sampled coarse centroids.
+
+The second half lives here once: the fixed-point scale (scaled_vec), the dot
+product and cosine (rcos6), the join that brings both sides' vectors onto a
+candidate frame (with_pair_vecs), and the two refinements — top-k
+(topk_by_cosine) and threshold pairs (pairs_above). The hyperplane signer
+(hyperplane_signed) holds the one eligibility rule of every hyperplane
+surface: exactly `dim` elements.
+
+LSH candidate recall is probabilistic (not pigeonhole-exact like text SimHash
+at fixed radius): P[same band] = (1 - theta/pi)^bits_per_band per band. Tests
 measure recall >= 0.9 vs brute force on clustered synthetic vectors; the
 radius/band knobs trade recall for candidate volume.
 """
@@ -27,6 +36,8 @@ from .banded_join import banded_self_join
 
 
 INT_SCALE = 1_000_000  # fixed-point scale shared with the SQL oracle
+# per-band-key candidate cap of the LSH route (banded_self_join hot_threshold)
+HOT_THRESHOLD = 10_000
 
 
 def hyperplanes_int(dim: int, n_planes: int = 64, seed: int = 42) -> np.ndarray:
@@ -43,17 +54,18 @@ def hyperplanes_int(dim: int, n_planes: int = 64, seed: int = 42) -> np.ndarray:
     return np.round(planes * INT_SCALE).astype(np.int64)
 
 
-def make_hyperplane_udf(dim: int, n_planes: int = 64, seed: int = 42):
+def make_hyperplane_udf(dim: int):
     """vector -> signed int64 hyperplane signature (bit i = sign(v . h_i)).
 
     Planes are derived from a seeded PRNG so every executor materializes the
     identical matrix — no broadcast needed, deterministic across runs. The
     dot products are exact int64 fixed-point (see hyperplanes_int); the
     input vector is scaled by INT_SCALE and rounded half-away-from-zero to
-    match SQL round() semantics (numpy rounds half-to-even).
+    match SQL round() semantics (numpy rounds half-to-even). A null or
+    wrong-dim vector signs to 0; hyperplane_signed excludes such rows.
     """
-    planes_t = hyperplanes_int(dim, n_planes, seed).T  # (dim, n_planes)
-    weights = (np.uint64(1) << np.arange(n_planes, dtype=np.uint64))
+    planes_t = hyperplanes_int(dim).T  # (dim, n_planes)
+    weights = np.uint64(1) << np.arange(planes_t.shape[1], dtype=np.uint64)
 
     @F.pandas_udf(LongType())
     def hyperplane_sig(vecs: pd.Series) -> pd.Series:
@@ -81,6 +93,20 @@ def make_hyperplane_udf(dim: int, n_planes: int = 64, seed: int = 42):
     return hyperplane_sig
 
 
+def hyperplane_signed(df: DataFrame, vec_col: str, dim: int, *cols) -> DataFrame:
+    """`cols` + "sig": the hyperplane signature of every eligible vector.
+
+    The eligibility rule of every hyperplane surface (batch LSH, streaming,
+    incremental, media): a null vector, or one whose length is not exactly
+    `dim`, is excluded. The kernel would sign a wrong-dim vector to the
+    masked 0, so two unrelated ones would pair at distance 0 — while the SQL
+    oracles' `len = dim` gate drops them."""
+    sig_udf = make_hyperplane_udf(dim)
+    return df.filter(
+        F.col(vec_col).isNotNull() & (F.size(vec_col) == dim)
+    ).select(*cols, sig_udf(F.col(vec_col).cast("array<double>")).alias("sig"))
+
+
 def scaled_vec(col):
     """array<float/double> -> array<long>, fixed-point INT_SCALE.
 
@@ -93,10 +119,21 @@ def scaled_vec(col):
     )
 
 
+def scaled_vecs(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """("_id", "_v"): integer-scaled vectors with null/empty rows dropped —
+    the brute-force and IVF eligibility rule. Such rows are absent from the
+    SQL oracle by construction (unnest emits no rows), and dropping them
+    keeps null/NaN cosines out of the rank ordering."""
+    return emb.select(
+        F.col(id_col).alias("_id"), scaled_vec(F.col(vec_col)).alias("_v")
+    ).filter(F.col("_v").isNotNull() & (F.size("_v") > 0))
+
+
 def _dot(a, b):
     # double accumulation: for INT_SCALE-scaled int vectors every partial sum
     # is an integer < 2^53 (dim<=128, |v|<=~2^20 scaled), so the float adds
-    # are EXACT and order-independent; raw double vectors also work (tests).
+    # are EXACT and order-independent — equal to the oracles' BIGINT sums;
+    # raw double vectors also work (tests).
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y),
         F.lit(0.0),
@@ -118,79 +155,21 @@ def rcos6(a, b):
     return F.round(cosine(a, b), 6) + F.lit(0.0)
 
 
-def _prefilter_vecs(vecs: DataFrame, cand: DataFrame, out_id: str) -> DataFrame:
-    """Semi-join reduction for the re-rank joins: the vector table is FAT
-    (scaled int64 arrays) while the candidate-id set is bare longs — broadcast
-    the distinct candidate ids so only vectors that appear in some candidate
-    pair enter the exchange. Candidate volume is capped per band by
-    hot_threshold; at a scale where the distinct-id set outgrows a broadcast
-    the caller should re-rank with plain shuffle joins instead."""
-    ids = cand.select(F.explode(F.array("id_lo", "id_hi")).alias(out_id)).distinct()
-    return vecs.join(F.broadcast(ids), out_id, "left_semi")
+def with_pair_vecs(cand: DataFrame, vecs: DataFrame, left: str, right: str) -> DataFrame:
+    """cand + "_va" / "_vb": the ("_id", "_v") vectors of its `left` and
+    `right` ids, by two shuffle-hash joins — how a candidate route hands its
+    pairs to topk_by_cosine or pairs_above."""
+    a = vecs.select(F.col("_id").alias(left), F.col("_v").alias("_va"))
+    b = vecs.select(F.col("_id").alias(right), F.col("_v").alias("_vb"))
+    return cand.join(a.hint("shuffle_hash"), left).join(b.hint("shuffle_hash"), right)
 
 
-def ann_topk(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 3,
-    dim: int | None = None,
-    hamming_radius: int = 24,
-    n_bands: int = 8,
-    seed: int = 42,
-    hot_threshold: int | None = 10_000,
-) -> DataFrame:
-    """(id, neighbor_id, rank, cosine): approximate top-k by cosine.
-
-    sig -> banded Hamming self-join (candidates) -> exact cosine -> window
-    top-k. Candidate pairs come back canonicalized (id_lo < id_hi); both
-    directions are re-expanded before ranking so every id gets a list.
-    """
-    if dim is None:
-        # driver round-trip; callers on big tables should pass dim explicitly
-        dim = len(emb.select(vec_col).first()[0])
-    sig_udf = make_hyperplane_udf(dim, seed=seed)
-    sigged = emb.select(
-        F.col(id_col).alias("_aid"),
-        scaled_vec(F.col(vec_col)).alias("_vec"),
-        sig_udf(F.col(vec_col).cast("array<double>")).alias("_sig"),
-        # eligibility contract: EXACTLY dim elements. Null/empty vectors are
-        # absent from the SQL oracle (unnest emits no rows); a WRONG-dim
-        # vector would sign to the masked 0 in the kernel while the oracle
-        # computed a partial-dot signature — so both engines exclude it
-        # outright (the oracle's ev CTE carries the same len = dim gate)
-    ).filter(F.col("_vec").isNotNull() & (F.size("_vec") == dim))
-    # cand feeds THREE subtrees (both directions + the two vector
-    # prefilters); without a checkpoint the band join + Hamming verify re-run
-    # per consumer — exchange reuse dedupes the shuffle but not the join.
-    # The pair set is id-only and hot_threshold-capped, so the checkpoint
-    # is small at scale.
-    cand = banded_self_join(
-        sigged,
-        "_aid",
-        "_sig",
-        radius=hamming_radius,
-        n_bands=n_bands,
-        hot_threshold=hot_threshold,
-        require_full_recall=False,
-    ).localCheckpoint()
-    both = cand.select(
-        F.col("id_lo").alias("qid"), F.col("id_hi").alias("nid")
-    ).unionByName(
-        cand.select(F.col("id_hi").alias("qid"), F.col("id_lo").alias("nid"))
-    )
-    q = _prefilter_vecs(
-        sigged.select(F.col("_aid").alias("qid"), F.col("_vec").alias("qv")), cand, "qid"
-    )
-    n = _prefilter_vecs(
-        sigged.select(F.col("_aid").alias("nid"), F.col("_vec").alias("nv")), cand, "nid"
-    )
-    scored = (
-        both.join(q.hint("shuffle_hash"), "qid")
-        .join(n.hint("shuffle_hash"), "nid")
-        .select(
-            "qid", "nid", rcos6(F.col("qv"), F.col("nv")).alias("cosine")
-        )
+def topk_by_cosine(pairs: DataFrame, k: int, id_col: str) -> DataFrame:
+    """(qid, nid, _va, _vb) -> (id_col, neighbor_id, rank, cosine): each
+    directed pair scored with rcos6, ranked per query by cosine descending
+    then neighbour id ascending, rank <= k kept."""
+    scored = pairs.select(
+        "qid", "nid", rcos6(F.col("_va"), F.col("_vb")).alias("cosine")
     )
     w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))
     return (
@@ -205,58 +184,92 @@ def ann_topk(
     )
 
 
+def pairs_above(pairs: DataFrame, threshold: float) -> DataFrame:
+    """(id_lo, id_hi, _va, _vb) -> (id_lo, id_hi, cosine): each canonical
+    pair scored with rcos6, cosine >= threshold kept."""
+    return pairs.select(
+        "id_lo", "id_hi", rcos6(F.col("_va"), F.col("_vb")).alias("cosine")
+    ).filter(F.col("cosine") >= threshold)
+
+
+def _prefilter_vecs(vecs: DataFrame, cand: DataFrame) -> DataFrame:
+    """Semi-join reduction for the re-rank joins: the vector table is FAT
+    (scaled int64 arrays) while the candidate-id set is bare longs — broadcast
+    the distinct candidate ids so only vectors that appear in some candidate
+    pair enter the exchange. Candidate volume is capped per band by
+    HOT_THRESHOLD; at a scale where the distinct-id set outgrows a broadcast
+    the caller should re-rank with plain shuffle joins instead."""
+    ids = cand.select(F.explode(F.array("id_lo", "id_hi")).alias("_id")).distinct()
+    return vecs.join(F.broadcast(ids), "_id", "left_semi")
+
+
+def _lsh_candidates(
+    emb: DataFrame, id_col: str, vec_col: str, dim: int, hamming_radius: int, n_bands: int
+) -> tuple[DataFrame, DataFrame]:
+    """(vecs, cand): the candidate-prefiltered scaled vectors ("_id", "_v")
+    and the canonical banded-join candidates (id_lo, id_hi) — the shared
+    front half of both LSH query shapes."""
+    sigged = hyperplane_signed(
+        emb, vec_col, dim, F.col(id_col).alias("_id"), scaled_vec(F.col(vec_col)).alias("_v")
+    )
+    # cand feeds three subtrees (the pair frame + both vector joins through
+    # the prefilter); without a checkpoint the band join + Hamming verify
+    # re-run per consumer — exchange reuse dedupes the shuffle but not the
+    # join. The pair set is id-only and HOT_THRESHOLD-capped, so the
+    # checkpoint is small at scale.
+    cand = (
+        banded_self_join(
+            sigged,
+            "_id",
+            "sig",
+            radius=hamming_radius,
+            n_bands=n_bands,
+            hot_threshold=HOT_THRESHOLD,
+            require_full_recall=False,
+        )
+        .select("id_lo", "id_hi")
+        .localCheckpoint()
+    )
+    return _prefilter_vecs(sigged.select("_id", "_v"), cand), cand
+
+
+def ann_topk(
+    emb: DataFrame,
+    dim: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    k: int = 3,
+    hamming_radius: int = 24,
+    n_bands: int = 8,
+) -> DataFrame:
+    """(id, neighbor_id, rank, cosine): approximate top-k by cosine.
+
+    Candidate pairs come back canonicalized (id_lo < id_hi); both directions
+    are re-expanded before ranking so every id gets a list.
+    """
+    vecs, cand = _lsh_candidates(emb, id_col, vec_col, dim, hamming_radius, n_bands)
+    both = cand.select(
+        F.col("id_lo").alias("qid"), F.col("id_hi").alias("nid")
+    ).unionByName(
+        cand.select(F.col("id_hi").alias("qid"), F.col("id_lo").alias("nid"))
+    )
+    return topk_by_cosine(with_pair_vecs(both, vecs, "qid", "nid"), k, id_col)
+
+
 def ann_near_pairs(
     emb: DataFrame,
     threshold: float,
+    dim: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
     hamming_radius: int = 28,
     n_bands: int = 8,
-    seed: int = 42,
-    hot_threshold: int | None = 10_000,
 ) -> DataFrame:
     """(id_lo, id_hi, cosine) with cosine >= threshold — the ANN-routed scale
     path for embedding near-duplicate pairs (the O(n^2) cross join in
     plans/queries.q_embedding_near_pairs stays as the small-scale oracle).
-
-    Candidates come from the banded hyperplane-LSH self-join; survivors get
-    an exact integer-scaled cosine. Recall is probabilistic in the LSH stage
-    (measured vs the brute-force twin in tests); precision is exact.
+    Recall is probabilistic in the LSH stage (measured vs the brute-force
+    twin in tests); precision is exact.
     """
-    if dim is None:
-        dim = len(emb.select(vec_col).first()[0])
-    sig_udf = make_hyperplane_udf(dim, seed=seed)
-    sigged = emb.select(
-        F.col(id_col).alias("_aid"),
-        scaled_vec(F.col(vec_col)).alias("_vec"),
-        sig_udf(F.col(vec_col).cast("array<double>")).alias("_sig"),
-        # eligibility contract: EXACTLY dim elements (see ann_topk)
-    ).filter(F.col("_vec").isNotNull() & (F.size("_vec") == dim))
-    # three consumers, same rationale as ann_topk's checkpoint
-    cand = banded_self_join(
-        sigged,
-        "_aid",
-        "_sig",
-        radius=hamming_radius,
-        n_bands=n_bands,
-        hot_threshold=hot_threshold,
-        require_full_recall=False,
-    ).localCheckpoint()
-    a = _prefilter_vecs(
-        sigged.select(F.col("_aid").alias("id_lo"), F.col("_vec").alias("_va")), cand, "id_lo"
-    )
-    b = _prefilter_vecs(
-        sigged.select(F.col("_aid").alias("id_hi"), F.col("_vec").alias("_vb")), cand, "id_hi"
-    )
-    return (
-        cand.select("id_lo", "id_hi")
-        .join(a.hint("shuffle_hash"), "id_lo")
-        .join(b.hint("shuffle_hash"), "id_hi")
-        .select(
-            "id_lo",
-            "id_hi",
-            rcos6(F.col("_va"), F.col("_vb")).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-    )
+    vecs, cand = _lsh_candidates(emb, id_col, vec_col, dim, hamming_radius, n_bands)
+    return pairs_above(with_pair_vecs(cand, vecs, "id_lo", "id_hi"), threshold)

@@ -23,8 +23,9 @@ Spark realization — zero Python in the hot path, three slim exchanges:
    (id, cell, ccos) projection — vectors never ride this exchange.
 3. candidates: each vector's inverted-list cell is its rank-1 assignment;
    each QUERY probes its `nprobe` best cells. probes |><| members on cell_id
-   (slim id pairs), then the exact fixed-point cosine re-rank joins the
-   vectors back by id and a per-query window keeps top-k.
+   (slim id pairs). The route ends there: ann's shared refinement
+   (with_pair_vecs, then topk_by_cosine or pairs_above) joins the vectors
+   back by id and scores each candidate with the exact fixed-point cosine.
 
 Determinism contract (shared with the DuckDB oracle, which replays the
 whole plan as SQL — candidacy is part of the differential spec, so the
@@ -44,36 +45,42 @@ cannot quadratically dominate the probe join — at 10^12 rows size n_cells
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
-from .ann import rcos6, scaled_vec
-
-
-def _scaled_vecs(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    """("_id", "_v"): integer-scaled vectors with null/empty rows dropped —
-    such rows are absent from the SQL oracle by construction (unnest emits
-    no rows), so the engine drops them too; parity, and it keeps null/NaN
-    cosines out of the rank ordering."""
-    return emb.select(
-        F.col(id_col).alias("_id"), scaled_vec(F.col(vec_col)).alias("_v")
-    ).filter(F.col("_v").isNotNull() & (F.size("_v") > 0))
+from .ann import pairs_above, rcos6, scaled_vecs, topk_by_cosine, with_pair_vecs
 
 
 def _sample_centroids(vecs: DataFrame, n_cells: int) -> list[tuple[int, list[int]]]:
-    """[(cell_id, scaled_centroid_vec)] from a _scaled_vecs frame — the
+    """[(cell_id, scaled_centroid_vec)] from an ann.scaled_vecs frame — the
     n_cells rows with the smallest (md5(id), id). orderBy+limit compiles to
     a distributed TakeOrdered (no global sort); the result is the
     coarse-quantizer state every IVF build materializes driver-side and
-    broadcasts (KBs: n_cells x dim x 8B). The ONE sampling implementation:
-    _ivf_candidates and ivf_cell_stats both call this, so they cannot
-    drift."""
+    broadcasts (KBs: n_cells x dim x 8B)."""
     rows = (
         vecs.orderBy(F.md5(F.col("_id").cast("string")).asc(), F.col("_id").asc())
         .limit(n_cells)
         .collect()
     )
     return [(i, list(r["_v"])) for i, r in enumerate(rows)]
+
+
+def _ranked_cells(vecs: DataFrame, n_cells: int) -> DataFrame:
+    """("_id", "cell_id", "_r"): every vector's cells ranked by exact cosine
+    to the sampled centroids (ties -> lower cell_id); rank 1 is the vector's
+    inverted-list cell. Map-only broadcast quantization, then one window
+    over the SLIM (id, cell, ccos) projection — vectors never ride this
+    exchange. The one cell assignment: _ivf_candidates and ivf_cell_stats
+    both call it, so they cannot drift."""
+    cents = vecs.sparkSession.createDataFrame(
+        _sample_centroids(vecs, n_cells), "cell_id int, cvec array<bigint>"
+    )
+    w = Window.partitionBy("_id").orderBy(F.desc("_ccos"), F.asc("cell_id"))
+    return (
+        vecs.join(F.broadcast(cents))
+        .select("_id", "cell_id", rcos6(F.col("_v"), F.col("cvec")).alias("_ccos"))
+        .select("_id", "cell_id", F.row_number().over(w).alias("_r"))
+    )
 
 
 def _ivf_candidates(
@@ -87,26 +94,10 @@ def _ivf_candidates(
     """(vecs, cand): the checkpointed scaled-vector table ("_id", "_v") and the
     directed probe candidates (qid, nid) — the shared front half of both IVF
     query shapes."""
-    spark: SparkSession = emb.sparkSession
-    vecs = _scaled_vecs(emb, id_col, vec_col).localCheckpoint()
-
     # the quantizer build and the main job both read the checkpointed
     # vectors instead of re-scanning the source
-    cents = spark.createDataFrame(
-        _sample_centroids(vecs, n_cells), "cell_id int, cvec array<bigint>"
-    )
-    # map-only quantization: n x n_cells slim rows out, vectors stay put
-    ccos = rcos6(F.col("_v"), F.col("cvec"))
-    assign = (
-        vecs.join(F.broadcast(cents))
-        .select("_id", "cell_id", ccos.alias("_ccos"))
-    )
-    w_cell = Window.partitionBy("_id").orderBy(
-        F.desc("_ccos"), F.asc("cell_id")
-    )
-    ranked_cells = assign.select(
-        "_id", "cell_id", F.row_number().over(w_cell).alias("_r")
-    ).localCheckpoint()
+    vecs = scaled_vecs(emb, id_col, vec_col).localCheckpoint()
+    ranked_cells = _ranked_cells(vecs, n_cells).localCheckpoint()
 
     members = ranked_cells.filter(F.col("_r") == 1).select(
         F.col("cell_id"), F.col("_id").alias("nid")
@@ -127,7 +118,7 @@ def _ivf_candidates(
     cand = probes.join(members.hint("shuffle_hash"), "cell_id").filter(
         F.col("qid") != F.col("nid")
     )
-    return vecs, cand
+    return vecs, cand.select("qid", "nid")
 
 
 def ivf_topk(
@@ -146,29 +137,7 @@ def ivf_topk(
     (plans/queries.q_embedding_knn) so recall is directly measurable.
     """
     vecs, cand = _ivf_candidates(emb, id_col, vec_col, n_cells, nprobe, hot_cap)
-    q = vecs.select(F.col("_id").alias("qid"), F.col("_v").alias("qv"))
-    n = vecs.select(F.col("_id").alias("nid"), F.col("_v").alias("nv"))
-    scored = (
-        cand.select("qid", "nid")
-        .join(q.hint("shuffle_hash"), "qid")
-        .join(n.hint("shuffle_hash"), "nid")
-        .select(
-            "qid",
-            "nid",
-            rcos6(F.col("qv"), F.col("nv")).alias("cosine"),
-        )
-    )
-    w_k = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w_k))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("qid").alias(id_col),
-            F.col("nid").alias("neighbor_id"),
-            F.col("rank").cast("int").alias("rank"),
-            "cosine",
-        )
-    )
+    return topk_by_cosine(with_pair_vecs(cand, vecs, "qid", "nid"), k, id_col)
 
 
 def ivf_near_pairs(
@@ -191,18 +160,7 @@ def ivf_near_pairs(
         F.least("qid", "nid").alias("id_lo"),
         F.greatest("qid", "nid").alias("id_hi"),
     ).distinct()
-    a = vecs.select(F.col("_id").alias("id_lo"), F.col("_v").alias("_va"))
-    b = vecs.select(F.col("_id").alias("id_hi"), F.col("_v").alias("_vb"))
-    return (
-        pairs.join(a.hint("shuffle_hash"), "id_lo")
-        .join(b.hint("shuffle_hash"), "id_hi")
-        .select(
-            "id_lo",
-            "id_hi",
-            rcos6(F.col("_va"), F.col("_vb")).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-    )
+    return pairs_above(with_pair_vecs(pairs, vecs, "id_lo", "id_hi"), threshold)
 
 
 def ivf_cell_stats(
@@ -217,23 +175,11 @@ def ivf_cell_stats(
     what hot_cap thresholds are SET from (read the histogram, pick the cap),
     so it's a first-class gated surface rather than a debug print.
 
-    Same front half as _ivf_candidates (shared _scaled_vecs /
-    _sample_centroids helpers — one sampling implementation, no drift), with
-    the probe/candidate stages dropped: map-only broadcast assignment, one
-    window for the argmax cell, one partial-aggregated exchange on cell_id.
-    n_cells rows out by construction."""
-    spark = emb.sparkSession
-    vecs = _scaled_vecs(emb, id_col, vec_col)
-    cents = spark.createDataFrame(
-        _sample_centroids(vecs, n_cells), "cell_id int, cvec array<bigint>"
-    )
-    ccos = rcos6(F.col("_v"), F.col("cvec"))
-    w = Window.partitionBy("_id").orderBy(F.desc("_ccos"), F.asc("cell_id"))
-    members = (
-        vecs.join(F.broadcast(cents))
-        .select("_id", "cell_id", ccos.alias("_ccos"))
-        .select("_id", "cell_id", F.row_number().over(w).alias("_r"))
-        .filter(F.col("_r") == 1)
+    The same cell assignment as _ivf_candidates (_ranked_cells), with the
+    probe/candidate stages dropped: one partial-aggregated exchange on
+    cell_id over the rank-1 cells. n_cells rows out by construction."""
+    members = _ranked_cells(scaled_vecs(emb, id_col, vec_col), n_cells).filter(
+        F.col("_r") == 1
     )
     return members.groupBy("cell_id").agg(
         F.count("*").alias("n_members"),

@@ -34,6 +34,13 @@ from ..functions.udfs import (
     make_shingle_hashes_udf,
     simhash64_udf,
 )
+from ..operators.ann import (
+    INT_SCALE as EMB_SCALE,
+    hyperplane_signed,
+    pairs_above,
+    scaled_vecs,
+    topk_by_cosine,
+)
 from ..operators.banded_join import banded_radius_search, banded_self_join
 from ..operators.cluster import assign_clusters
 from ..operators.containment import containment_pairs
@@ -49,8 +56,6 @@ SEARCH_RADIUS = 6
 TRUNC_RADIUS = 8  # A8 truncation gate: wide enough that sf0.01 counts exceed 1
 # n_bands is left to bands_for_radius(radius): r+1 maximally-wide bands give
 # the identical verified pair set with the most selective candidate join
-
-EMB_SCALE = 1_000_000
 
 LANG_MARKERS = {
     "en": ["the", "and", "of", "to", "in"],
@@ -1916,42 +1921,21 @@ def q_pack_efficiency(spark, sf_dir):
 
 # --- embeddings (similarity search) -------------------------------------------
 
-def _scaled(col):
-    # cast float->double BEFORE scaling so both engines round identical doubles
-    return F.transform(
-        col, lambda x: F.round(x.cast("double") * F.lit(float(EMB_SCALE))).cast("long")
-    )
-
-
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0).cast("long"), lambda acc, v: acc + v
-    )
+def _embedding_pairs(spark, sf_dir, left: str, right: str, keep) -> DataFrame:
+    """Brute-force candidates: the cross join of the scaled embeddings
+    (ann.scaled_vecs: null/empty rows dropped) with itself, ids named
+    `left` / `right`, vectors "_va" / "_vb", rows where keep(left, right)."""
+    v = scaled_vecs(load(spark, sf_dir, "embeddings"), "vec_id", "embedding")
+    a = v.select(F.col("_id").alias(left), F.col("_v").alias("_va"))
+    b = v.select(F.col("_id").alias(right), F.col("_v").alias("_vb"))
+    return a.join(b, keep(F.col(left), F.col(right)))
 
 
 def q_embedding_knn(spark, sf_dir):
     """Brute-force exact cosine top-3 per vector (integer-scaled for
     cross-engine determinism); rank ties -> neighbor id asc."""
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", _scaled(F.col("embedding")).alias("v")
-    ).filter(F.col("v").isNotNull() & (F.size("v") > 0))
-    a = e.select(F.col("vec_id").alias("vec_id"), F.col("v").alias("va"))
-    b = e.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("vb"))
-    joined = a.join(b, F.col("vec_id") != F.col("neighbor_id"))
-    cos = (
-        _dot(F.col("va"), F.col("vb"))
-        / (F.sqrt(_dot(F.col("va"), F.col("va"))) * F.sqrt(_dot(F.col("vb"), F.col("vb"))))
-    )
-    scored = joined.select(
-        # + 0.0 normalizes a rounded -0.0 before ranking/hashing (ann.rcos6)
-        "vec_id", "neighbor_id", (F.round(cos, 6) + F.lit(0.0)).alias("cosine")
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("vec_id", "neighbor_id", F.col("rank").cast("int").alias("rank"), "cosine")
-    )
+    pairs = _embedding_pairs(spark, sf_dir, "qid", "nid", lambda q, n: q != n)
+    return topk_by_cosine(pairs, 3, "vec_id")
 
 
 EMB_DIM = 64  # testdata embeddings dimension (all scale factors)
@@ -2076,8 +2060,8 @@ def q_embedding_dup_clusters(spark, sf_dir):
 
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     pairs = ivf_near_pairs(e, threshold=0.4, n_cells=16, nprobe=4)
-    # the id universe mirrors the oracle's `ids` CTE (and operators/ivf.
-    # _scaled_vecs): null/empty embeddings are absent from both plans
+    # the id universe mirrors the oracle's `ids` CTE (and operators/ann.
+    # scaled_vecs): null/empty embeddings are absent from both plans
     ids = e.filter(
         F.col("embedding").isNotNull() & (F.size("embedding") > 0)
     ).select(F.col("vec_id").alias("id"))
@@ -2100,20 +2084,8 @@ def q_embedding_near_pairs_ann(spark, sf_dir):
 def q_embedding_near_pairs(spark, sf_dir):
     """Embedding-cosine near-duplicate pairs (cosine >= 0.4; the testdata
     embeddings top out near 0.51)."""
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", _scaled(F.col("embedding")).alias("v")
-    ).filter(F.col("v").isNotNull() & (F.size("v") > 0))
-    a = e.select(F.col("vec_id").alias("id_lo"), F.col("v").alias("va"))
-    b = e.select(F.col("vec_id").alias("id_hi"), F.col("v").alias("vb"))
-    joined = a.join(b, F.col("id_lo") < F.col("id_hi"))
-    cos = (
-        _dot(F.col("va"), F.col("vb"))
-        / (F.sqrt(_dot(F.col("va"), F.col("va"))) * F.sqrt(_dot(F.col("vb"), F.col("vb"))))
-    )
-    return joined.select(
-        # + 0.0 normalizes a rounded -0.0 before hashing (ann.rcos6)
-        "id_lo", "id_hi", (F.round(cos, 6) + F.lit(0.0)).alias("cosine")
-    ).filter(F.col("cosine") >= 0.4)
+    pairs = _embedding_pairs(spark, sf_dir, "id_lo", "id_hi", lambda a, b: a < b)
+    return pairs_above(pairs, 0.4)
 
 
 # --- container-shaped coverage (A5/J2/A9/J11) --------------------------------
@@ -2581,7 +2553,7 @@ def q_events_hourly_rate(spark, sf_dir):
         .agg(
             F.count("*").alias("n_events"),
             # order-independent float sum: integer-scale each value BEFORE
-            # summing (the embeddings trick, _scaled above) — round(sum(dbl))
+            # summing (the embeddings trick, ann.scaled_vec) — round(sum(dbl))
             # is partition-order-sensitive and diverged from the oracle in r1
             F.round(
                 F.sum(F.round(F.col("value") * 1_000_000).cast("long")) / 1e6, 6
@@ -4100,20 +4072,8 @@ def q_incremental_embedding_near_pairs(spark, sf_dir):
     batch-touching — hash-exact against the SQL-recomputed signatures.
     Incremental cost scales with |new|, not |corpus|^2: the daily
     embedding-index update a 10^12-vector dedup service runs."""
-    from ..operators.ann import make_hyperplane_udf
-
-    sig_udf = make_hyperplane_udf(EMB_DIM)
-    d = (
-        load(spark, sf_dir, "embeddings")
-        # eligibility: EXACTLY dim elements (wrong-dim would sign to the
-        # kernel's masked 0 — the oracle's ev CTE carries the same gate)
-        .filter(
-            F.col("embedding").isNotNull() & (F.size("embedding") == EMB_DIM)
-        )
-        .select(
-            "vec_id",
-            sig_udf(F.col("embedding").cast("array<double>")).alias("sig"),
-        )
+    d = hyperplane_signed(
+        load(spark, sf_dir, "embeddings"), "embedding", EMB_DIM, "vec_id"
     )
     is_new = (F.col("vec_id") % INCR_NEW_MOD) == 0
     old, new = d.filter(~is_new), d.filter(is_new)

@@ -1,17 +1,17 @@
-"""Table catalog: Iceberg when available, parquet + snapshot sidecar otherwise.
+"""Table catalog: versioned parquet tables with a snapshot manifest.
 
 The reference's persistence layer is a PostgreSQL table with INSERT / upsert /
 UPDATE / DELETE verbs (/root/reference/dbApi.py:249-299, :569-588). At cluster
 scale those verbs map to Iceberg `append` / `MERGE INTO` / `DELETE FROM` with
-snapshot isolation. This sandbox has no Iceberg jars, so `ParquetCatalog`
-provides the same verb surface over versioned parquet snapshots with a JSON
-manifest — every mutation creates a new immutable snapshot directory and the
-manifest flip is atomic (os.replace), which is exactly Iceberg's
-metadata-pointer-swap commit model.
+snapshot isolation. `ParquetCatalog` provides that verb surface over
+versioned parquet snapshots with a JSON manifest — every mutation creates a
+new immutable snapshot directory and the manifest flip is atomic
+(os.replace), which is Iceberg's metadata-pointer-swap commit model.
 
-At deploy time, `for_spark()` returns an `IcebergCatalog` when a Spark catalog
-implementing `org.apache.iceberg.spark.SparkCatalog` is configured; all engine
-code is written against the shared verb surface so the swap is config-only.
+There is no Iceberg adapter: without Iceberg jars in the repository no test
+could run one, and an unrun adapter drifts from this verb surface (Column
+predicates, snapshots, bucket specs, commit records). One belongs here once
+the jars ship with the repository and a test exercises it.
 """
 
 from __future__ import annotations
@@ -275,63 +275,3 @@ class ParquetCatalog:
 
     def drop(self, table: str) -> None:
         shutil.rmtree(self._tdir(table), ignore_errors=True)
-
-
-class IcebergCatalog:
-    """Same verb surface on a real Iceberg catalog (config-only swap).
-
-    Not exercised in the sandbox (no Iceberg jars, SURVEY.md §7); kept thin so
-    the deploy path is `spark-submit --packages org.apache.iceberg:...`.
-    """
-
-    def __init__(self, spark: SparkSession, namespace: str = "dedup"):
-        self.spark = spark
-        self.namespace = namespace
-        spark.sql(f"CREATE NAMESPACE IF NOT EXISTS {namespace}")
-
-    def _fq(self, table: str) -> str:
-        return f"{self.namespace}.{table}"
-
-    def exists(self, table: str) -> bool:
-        return self.spark.catalog.tableExists(self._fq(table))
-
-    def read(self, table: str, version: int | None = None) -> DataFrame:
-        if version is not None:
-            return (
-                self.spark.read.option("snapshot-id", version)
-                .table(self._fq(table))
-            )
-        return self.spark.table(self._fq(table))
-
-    def overwrite(self, df: DataFrame, table: str) -> None:
-        df.writeTo(self._fq(table)).createOrReplace()
-
-    def append(self, df: DataFrame, table: str) -> None:
-        if not self.exists(table):
-            df.writeTo(self._fq(table)).create()
-        else:
-            df.writeTo(self._fq(table)).append()
-
-    def merge(self, df: DataFrame, table: str, key_cols: list[str]) -> None:
-        if not self.exists(table):
-            df.writeTo(self._fq(table)).create()
-            return
-        df.createOrReplaceTempView("_merge_src")
-        on = " AND ".join(f"t.{k} = s.{k}" for k in key_cols)
-        self.spark.sql(
-            f"MERGE INTO {self._fq(table)} t USING _merge_src s ON {on} "
-            "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
-        )
-
-    def delete_where(self, table: str, predicate_sql: str) -> None:
-        if not predicate_sql:
-            raise ValueError("refusing DELETE without a predicate")
-        self.spark.sql(f"DELETE FROM {self._fq(table)} WHERE {predicate_sql}")
-
-
-def for_spark(spark: SparkSession, root: str) -> ParquetCatalog | IcebergCatalog:
-    """Prefer Iceberg when the session has an Iceberg catalog; else parquet."""
-    impl = spark.conf.get("spark.sql.catalog.spark_catalog", "")
-    if "iceberg" in impl.lower():
-        return IcebergCatalog(spark)
-    return ParquetCatalog(spark, root)

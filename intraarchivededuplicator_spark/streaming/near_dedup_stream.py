@@ -58,7 +58,7 @@ from pyspark.sql.types import (
 )
 
 from ..config import DEFAULT_CONFIG, DedupConfig, bands_for_radius
-from ..functions.hashing import band_keys_np, popcount64_np
+from ..functions.hashing import BAD_SIMHASHES, band_keys_np, popcount64_np
 from ..functions.udfs import simhash64_udf
 from ..operators.banded_join import banded_self_join, explode_bands
 
@@ -225,7 +225,7 @@ def stream_simhash_near_pairs(
     docs = (
         pages.select("url", "warc_ts", simhash64_udf(F.col("text")).alias("sig"))
         .filter(F.col("sig").isNotNull())
-        .filter(~F.col("sig").isin(list(cfg.blacklist)))
+        .filter(~F.col("sig").isin(list(BAD_SIMHASHES)))
     )
     return stream_sig_near_pairs(docs, radius, n_bands, watermark, horizon_ms, hot_cap)
 
@@ -276,29 +276,24 @@ def stream_embedding_near_pairs(
     watermark: str = "24 hours",
     horizon: str | None = None,
     hot_cap: int = 4096,
-    seed: int = 42,
 ) -> DataFrame:
     """STREAMING SEMANTIC near-dedup: hyperplane-LSH signatures
-    (operators/ann.make_hyperplane_udf — the exact int64 fixed-point
-    kernel, bit-identical to the batch ANN path) over an unbounded vector
-    stream, through the SAME banded stateful core as text near-dedup.
-    With n_bands > radius the pigeonhole guarantee holds, so the emitted
-    pair set is EXACTLY the Hamming-radius pairs within the horizon —
-    gate-checkable against brute force over SQL-recomputed signatures,
-    not recall-statistical. Eligibility contract (same as the batch ANN
-    family): EXACTLY dim elements — a wrong-dim vector would sign to the
-    kernel's masked 0 and fabricate distance-0 pairs, so it is excluded
-    here and by the oracle's len = dim gate alike."""
-    from ..operators.ann import make_hyperplane_udf
+    (operators/ann.hyperplane_signed — the exact int64 fixed-point kernel,
+    bit-identical to the batch ANN path) over an unbounded vector stream,
+    through the SAME banded stateful core as text near-dedup. With
+    n_bands > radius the pigeonhole guarantee holds, so the emitted pair set
+    is EXACTLY the Hamming-radius pairs within the horizon — gate-checkable
+    against brute force over SQL-recomputed signatures, not
+    recall-statistical. The signer's eligibility rule (exactly dim elements)
+    is the oracle's len = dim gate."""
+    from ..operators.ann import hyperplane_signed
 
-    sig_udf = make_hyperplane_udf(dim, seed=seed)
-    docs = (
-        vecs.filter(F.col(vec_col).isNotNull() & (F.size(vec_col) == dim))
-        .select(
-            F.col(id_col).alias("url"),
-            F.col(ts_col).alias("warc_ts"),
-            sig_udf(F.col(vec_col).cast("array<double>")).alias("sig"),
-        )
+    docs = hyperplane_signed(
+        vecs,
+        vec_col,
+        dim,
+        F.col(id_col).alias("url"),
+        F.col(ts_col).alias("warc_ts"),
     )
     horizon_ms = duration_ms(horizon or watermark)
     return stream_sig_near_pairs(docs, radius, n_bands, watermark, horizon_ms, hot_cap)

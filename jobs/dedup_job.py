@@ -17,8 +17,10 @@ Local smoke:
 
 The job is resumable: stages whose checkpoint sidecar exists with the same
 config fingerprint are re-read, not recomputed (engine/checkpoint.py). Final
-tables land in the catalog (Iceberg when configured, versioned parquet
-otherwise): docs, pairs, clusters, plus a run_metrics lineage table.
+tables land in a versioned parquet catalog under --warehouse
+(sources/catalog.ParquetCatalog): docs, pairs, clusters, hot_bands, plus a
+run_metrics lineage table. The SimHash band count follows from the radius
+(config.bands_for_radius).
 """
 
 from __future__ import annotations
@@ -37,7 +39,6 @@ def main(argv: list[str] | None = None) -> None:
     p.add_argument("--no-extract", action="store_true", help="input already has text")
     p.add_argument("--k-shingle", type=int, default=5)
     p.add_argument("--simhash-radius", type=int, default=4)
-    p.add_argument("--simhash-bands", type=int, default=5)
     p.add_argument("--minhash-k", type=int, default=128)
     p.add_argument("--minhash-bands", type=int, default=32)
     p.add_argument("--hot-band-threshold", type=int, default=500)
@@ -56,7 +57,7 @@ def main(argv: list[str] | None = None) -> None:
     from intraarchivededuplicator_spark.config import DedupConfig
     from intraarchivededuplicator_spark.engine.checkpoint import StageCheckpointer
     from intraarchivededuplicator_spark.engine.pipeline import dedup_pipeline
-    from intraarchivededuplicator_spark.sources.catalog import for_spark
+    from intraarchivededuplicator_spark.sources.catalog import ParquetCatalog
 
     if args.master:
         from intraarchivededuplicator_spark.session import get_spark
@@ -69,7 +70,6 @@ def main(argv: list[str] | None = None) -> None:
     cfg = DedupConfig(
         k_shingle=args.k_shingle,
         simhash_radius=args.simhash_radius,
-        simhash_bands=args.simhash_bands,
         minhash_k=args.minhash_k,
         minhash_bands=args.minhash_bands,
         hot_band_threshold=args.hot_band_threshold,
@@ -77,7 +77,7 @@ def main(argv: list[str] | None = None) -> None:
         containment_winnow_w=args.containment_winnow_w,
     )
     ck = StageCheckpointer(root=args.checkpoint_dir)
-    catalog = for_spark(spark, args.warehouse)
+    catalog = ParquetCatalog(spark, args.warehouse)
 
     t0 = time.time()
     pages = spark.read.parquet(args.input)

@@ -44,9 +44,9 @@ def _clustered_vectors(n_clusters=12, per_cluster=8, seed=7):
 class TestHyperplaneSignature:
     def test_deterministic_across_invocations(self, spark):
         df = spark.createDataFrame(_clustered_vectors())
-        udf = make_hyperplane_udf(DIM, seed=42)
+        udf = make_hyperplane_udf(DIM)
         a = {r["vec_id"]: r["s"] for r in df.select("vec_id", udf(F.col("embedding").cast("array<double>")).alias("s")).collect()}
-        udf2 = make_hyperplane_udf(DIM, seed=42)
+        udf2 = make_hyperplane_udf(DIM)
         b = {r["vec_id"]: r["s"] for r in df.select("vec_id", udf2(F.col("embedding").cast("array<double>")).alias("s")).collect()}
         assert a == b
 
@@ -408,17 +408,19 @@ class TestIvfTopK:
         neighbor may belong to an over-cap cell, recomputed independently."""
         from collections import Counter
 
-        from intraarchivededuplicator_spark.operators.ann import INT_SCALE
+        from intraarchivededuplicator_spark.operators.ann import (
+            INT_SCALE,
+            scaled_vecs,
+        )
         from intraarchivededuplicator_spark.operators.ivf import (
             _sample_centroids,
-            _scaled_vecs,
             ivf_topk,
         )
 
         rows = _clustered_vectors()
         df = spark.createDataFrame(rows)
         n_cells, cap = 4, 10
-        cents = _sample_centroids(_scaled_vecs(df, "vec_id", "embedding"), n_cells)
+        cents = _sample_centroids(scaled_vecs(df, "vec_id", "embedding"), n_cells)
         scaled = {
             r.vec_id: np.copysign(
                 np.floor(np.abs(np.array(r.embedding, dtype=np.float64)) * INT_SCALE + 0.5),
@@ -1085,7 +1087,7 @@ class TestBatchSignatureKernel:
                 for i in range(200)]
         rows += [(900, None), (901, [0.5] * (DIM - 1))]  # null + wrong dim
         df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-        udf = make_hyperplane_udf(DIM, seed=42)
+        udf = make_hyperplane_udf(DIM)
         got = {
             r["vec_id"]: r["s"]
             for r in df.select(
@@ -1093,7 +1095,7 @@ class TestBatchSignatureKernel:
             ).collect()
         }
 
-        planes = hyperplanes_int(DIM, seed=42)
+        planes = hyperplanes_int(DIM)
         weights = np.uint64(1) << np.arange(64, dtype=np.uint64)
         for vid, v in rows:
             if v is None or len(v) != DIM:

@@ -1,14 +1,14 @@
 """The flagship pass honours its config and leaves nothing cached.
 
 DedupConfig derives the MinHash permutation family from minhash_k, so the
-field sets the signature length it names; dedup_pipeline keeps no cached
-table alive after a pass.
+field sets the signature length it names, and the SimHash band count from
+simhash_radius; dedup_pipeline keeps no cached table alive after a pass.
 """
 
 import pytest
 from pyspark.sql import functions as F
 
-from intraarchivededuplicator_spark.config import DedupConfig
+from intraarchivededuplicator_spark.config import DedupConfig, bands_for_radius
 from intraarchivededuplicator_spark.engine.pipeline import (
     build_pairs,
     compute_docs,
@@ -20,6 +20,14 @@ from intraarchivededuplicator_spark.functions.hashing import MinHashParams
 
 def test_default_minhash_params_are_unchanged():
     assert DedupConfig().minhash_params == MinHashParams.make(128, 42)
+
+
+def test_simhash_bands_follow_the_radius():
+    """Radius 6, the reference's interactive radius, used to fail against a
+    fixed 5-band field; the band count is now derived from the radius."""
+    assert bands_for_radius(DedupConfig(simhash_radius=6).simhash_radius) == 7
+    assert bands_for_radius(DedupConfig().simhash_radius) == 5
+    assert not hasattr(DedupConfig(), "simhash_bands")
 
 
 def test_minhash_k_sets_signature_length(spark):

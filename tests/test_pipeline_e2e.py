@@ -16,6 +16,7 @@ from intraarchivededuplicator_spark.engine.pipeline import (
     dedup_pipeline,
 )
 from intraarchivededuplicator_spark.fixtures.synth import gen_pages
+from intraarchivededuplicator_spark.functions.hashing import BAD_SIMHASHES
 from intraarchivededuplicator_spark.functions.udfs import make_fast_signatures_udf
 from intraarchivededuplicator_spark.operators.banded_join import brute_force_pairs
 from intraarchivededuplicator_spark.operators.containment import (
@@ -23,7 +24,7 @@ from intraarchivededuplicator_spark.operators.containment import (
     containment_pairs_bruteforce,
 )
 
-CFG = DedupConfig(hot_band_threshold=100, hot_band_salt=4)
+CFG = DedupConfig(hot_band_threshold=100)
 N_ROWS = 800
 WINNOW_COLS = {
     "winnow_interior_col": "win_interior",
@@ -80,7 +81,7 @@ def test_recall_vs_bruteforce_oracle(spark, result):
     docs = result["docs"]
     truth_pairs = brute_force_pairs(
         docs.filter(
-            ~F.col("simhash").isin(list(CFG.blacklist)) & (F.col("n_tokens") > 0)
+            ~F.col("simhash").isin(list(BAD_SIMHASHES)) & (F.col("n_tokens") > 0)
         ),
         "id",
         "simhash",
@@ -210,7 +211,7 @@ def test_containment_winnowed_differential(spark, corpus):
     >> winnow_w + k + 1)."""
     pages, _, _ = corpus
     cfg_w = DedupConfig(
-        hot_band_threshold=100, hot_band_salt=4, containment_winnow_w=3
+        hot_band_threshold=100, containment_winnow_w=3
     )
     docs = compute_docs(pages, cfg_w).cache()
     got = {
@@ -235,7 +236,7 @@ def test_containment_winnowed_via_pipeline_columns(spark, corpus):
     pair set must match the non-winnowed default path."""
     pages, _, _ = corpus
     cfg_w = DedupConfig(
-        hot_band_threshold=100, hot_band_salt=4, containment_winnow_w=8
+        hot_band_threshold=100, containment_winnow_w=8
     )
     docs = compute_docs(pages, cfg_w).cache()
     assert "win_interior" in docs.columns and "win_boundary" in docs.columns

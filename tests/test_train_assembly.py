@@ -535,12 +535,21 @@ def test_wrong_dim_vectors_excluded_everywhere(spark):
     be EXCLUDED by engine and oracle alike — the kernel would mask it to
     signature 0 (fabricating distance-0 pairs) while a partial-dot SQL
     signature would be nonzero. Plant two identical wrong-dim vectors
-    close in id-space and assert no pair mentions them on either engine."""
+    close in id-space and assert no pair mentions them on either engine.
+    Media features sign through the same rule: two unrelated 8-long
+    feature vectors would both sign to 0 and pair at distance 0."""
     import duckdb as ddb
 
     from pyspark.sql import functions as F
 
-    from intraarchivededuplicator_spark.operators.ann import ann_near_pairs
+    from intraarchivededuplicator_spark.functions.multimodal import (
+        DECODED_SCHEMA,
+        media_near_dup_pairs,
+    )
+    from intraarchivededuplicator_spark.operators.ann import (
+        ann_near_pairs,
+        ann_topk,
+    )
 
     base = spark.read.parquet(f"{SF}/embeddings.parquet").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
@@ -549,11 +558,22 @@ def test_wrong_dim_vectors_excluded_everywhere(spark):
         [(900001, [1.0] * 8), (900002, [1.0] * 8)],
         "vec_id long, embedding array<double>",
     )
-    out = ann_near_pairs(
-        base.unionByName(bad), threshold=0.5, dim=q.EMB_DIM
-    ).collect()
+    emb = base.unionByName(bad)
+    out = ann_near_pairs(emb, threshold=0.5, dim=q.EMB_DIM).collect()
     ids = {i for r in out for i in (r.id_lo, r.id_hi)}
     assert 900001 not in ids and 900002 not in ids
+    top = ann_topk(emb, q.EMB_DIM, k=3).collect()
+    assert top
+    ids = {i for r in top for i in (r.vec_id, r.neighbor_id)}
+    assert 900001 not in ids and 900002 not in ids
+    decoded = spark.createDataFrame(
+        [
+            (1, "u1", "image", 10, 4, 4, 1, [0.1 * i for i in range(8)]),
+            (2, "u2", "image", 10, 4, 4, 1, [1.0 - 0.2 * i for i in range(8)]),
+        ],
+        DECODED_SCHEMA,
+    )
+    assert media_near_dup_pairs(decoded).collect() == []
     # oracle twin: the planted rows vanish behind the len = dim gate
     con = ddb.connect()
     con.execute(
